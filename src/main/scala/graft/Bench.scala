@@ -48,7 +48,7 @@ object Bench {
     * slower boxes that produced the r14-r18 driver-vs-banked drift.
     * Env-overridable for recalibration on a new reference box. */
   private val CalibRef: Double =
-    sys.env.get("SPARK_GRAFT_BENCH_CALIB_REF").map(_.toDouble).getOrElse(0.42)
+    EnvNum.double("SPARK_GRAFT_BENCH_CALIB_REF", 0.42)
 
   /** Reference wall seconds for the MULTI-threaded probe (one
     * [[CalibRef]] task per advertised cpu, started together): measures
@@ -57,7 +57,7 @@ object Bench {
     * inflates this while leaving the 1-thread probe (and our cgroup's
     * load average) untouched. Same box, same idle measurement. */
   private val CalibMtRef: Double =
-    sys.env.get("SPARK_GRAFT_BENCH_CALIB_MT_REF").map(_.toDouble).getOrElse(0.64)
+    EnvNum.double("SPARK_GRAFT_BENCH_CALIB_MT_REF", 0.64)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -115,8 +115,8 @@ object Bench {
     // can never silently become the artifact of record. Setting
     // SPARK_GRAFT_BENCH_MAX_LOAD makes a still-loaded box a REFUSAL
     // (exit 2) instead of a flagged artifact.
-    val loadWarn = sys.env.getOrElse("SPARK_GRAFT_BENCH_LOAD_WARN", "1.5").toDouble
-    val settleSecs = sys.env.getOrElse("SPARK_GRAFT_BENCH_SETTLE_SECS", "90").toInt
+    val loadWarn = EnvNum.double("SPARK_GRAFT_BENCH_LOAD_WARN", 1.5)
+    val settleSecs = EnvNum.int("SPARK_GRAFT_BENCH_SETTLE_SECS", 90)
     val loadAvgInitial = sysLoadAvg
     var loadAvgPre = loadAvgInitial
     if (loadAvgPre > loadWarn && settleSecs > 0) {
@@ -176,13 +176,13 @@ object Bench {
     val calibPre = calibSecs()
     val calibMtPre = calibMtSecs()
     val calibRatioBound =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_CALIB_BOUND", "1.3").toDouble
+      EnvNum.double("SPARK_GRAFT_BENCH_CALIB_BOUND", 1.3)
     val loadOk = loadAvgPre <= loadWarn
     if (!loadOk) {
       System.err.println(f"[bench] WARNING: load_avg $loadAvgPre%.2f still > " +
         f"$loadWarn%.2f after settle — medians are NOT bankable " +
         "(load_ok:false rides the artifact)")
-      sys.env.get("SPARK_GRAFT_BENCH_MAX_LOAD").map(_.toDouble).foreach { max =>
+      EnvNum.doubleOpt("SPARK_GRAFT_BENCH_MAX_LOAD").foreach { max =>
         if (loadAvgPre > max) {
           System.err.println(f"[bench] REFUSING: load_avg $loadAvgPre%.2f > " +
             f"max $max%.2f (SPARK_GRAFT_BENCH_MAX_LOAD)")
@@ -248,8 +248,8 @@ object Bench {
     // of reps, combined) unless SPARK_GRAFT_BENCH_RERUN_UNSTABLE=0;
     // whatever remains unstable rides the artifact by name, and the
     // suite-level `medians_bankable` boolean is the one-glance verdict.
-    val iqrBound = sys.env.getOrElse("SPARK_GRAFT_BENCH_IQR_BOUND", "0.25").toDouble
-    val outlierRatio = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUTLIER_RATIO", "2.5").toDouble
+    val iqrBound = EnvNum.double("SPARK_GRAFT_BENCH_IQR_BOUND", 0.25)
+    val outlierRatio = EnvNum.double("SPARK_GRAFT_BENCH_OUTLIER_RATIO", 2.5)
     val rerunUnstable = sys.env.getOrElse("SPARK_GRAFT_BENCH_RERUN_UNSTABLE", "1") != "0"
     def isUnstable(times: Seq[Double]): Boolean = {
       val ok = times.filter(_ >= 0).sorted
@@ -276,7 +276,7 @@ object Bench {
     // query; a 5-rep median tolerates two without moving, so the
     // headline tracks the plan instead of the neighbors (r11's 3×
     // median/min spreads on untouched queries)
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt.max(1)
+    val reps = EnvNum.int("SPARK_GRAFT_BENCH_REPS", 5).max(1)
     val rounds = Seq.fill(reps) {
       // between full rounds (charged to no query): trigger the
       // ContextCleaner so shuffle files / broadcast blocks of the
@@ -307,7 +307,7 @@ object Bench {
     // combined median (blips are diluted, never erased), and the
     // verdict remains the freshest set's — same adjudication rule as
     // r19, just applied to the final attempt instead of the only one.
-    val rerunMax = sys.env.getOrElse("SPARK_GRAFT_BENCH_RERUN_MAX", "3").toInt.max(1)
+    val rerunMax = EnvNum.int("SPARK_GRAFT_BENCH_RERUN_MAX", 3).max(1)
     val rerunTimes: Map[String, (Seq[Double], Seq[Double])] =
       if (!rerunUnstable) Map.empty
       else measured.filter { case (_, ts) => isUnstable(ts) }.map { case (name, _) =>

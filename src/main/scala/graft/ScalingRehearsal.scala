@@ -212,7 +212,7 @@ object ScalingRehearsal {
     // scale: SCALING.md's single-pass tables showed one ~2-3× outlier
     // per pass, behind which a real quadratic could hide — min-of-3 is
     // the plan's floor (outlier-immune), the median shows the spread.
-    val passes = sys.env.getOrElse("SPARK_GRAFT_REHEARSAL_PASSES", "3").toInt.max(1)
+    val passes = EnvNum.int("SPARK_GRAFT_REHEARSAL_PASSES", 3).max(1)
     measure(spark, baseDir, 16)
     val onePasses = Seq.fill(passes)(measure(spark, baseDir, 16))
     val oneCc = graft.llm.Dedup.lastCcRounds
@@ -450,7 +450,7 @@ object MvTickRehearsal {
     val mult = args.lift(1).map(_.toInt).getOrElse(10)
     val churn = args.lift(2).map(_.toInt).getOrElse(100)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val passes = sys.env.getOrElse("SPARK_GRAFT_REHEARSAL_PASSES", "3").toInt.max(1)
+    val passes = EnvNum.int("SPARK_GRAFT_REHEARSAL_PASSES", 3).max(1)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

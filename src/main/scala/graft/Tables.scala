@@ -20,23 +20,6 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Scan fan-out mode: `auto` round-robin-repartitions a loaded table
-    * to the session's default parallelism when the file's byte-planned
-    * split count would leave most cores idle — the guide §2.5 "one
-    * huge unsplittable file" remedy, relevant here because the
-    * testdata ships ONE parquet row group per table (a 0.6 MB
-    * documents file carries the whole corpus into a single scan task).
-    * Default `off` — MEASURED AND REJECTED for the bench (r19,
-    * interleaved one-JVM A/B over 12 queries at sf0.1/32 cores:
-    * fanout=auto LOST on 10 of 12, e.g. q_lm_trigram_backoff 2.65 →
-    * 3.84 s, q_token_rarity 1.10 → 1.45 s): the extra exchange + AQE
-    * stage round per scan instance costs more than the serial scan
-    * task it parallelizes, because the first keyed exchange of each
-    * pipeline already spreads the heavy reduce-side work. Kept as a
-    * knob for deployments with genuinely unsplittable large single
-    * files (gzip text, mis-written single-row-group parquet), where
-    * the trade flips. */
-  val ScanFanoutConf = "spark.graft.scan.fanout"
   /** Ceiling on total file bytes eligible for fan-out: inputs larger
     * than this plan enough byte-splits on their own (and repartitioning
     * them would shuffle real volume for nothing). */
@@ -54,8 +37,7 @@ object Tables {
   }
 
   private def fanout(spark: SparkSession, df: DataFrame, path: String,
-      key: Option[String] = None, force: Boolean = false): DataFrame = {
-    if (!force && spark.conf.get(ScanFanoutConf, "off") != "auto") return df
+      key: Option[String]): DataFrame = {
     val size =
       try {
         val p = new org.apache.hadoop.fs.Path(path)
@@ -73,13 +55,18 @@ object Tables {
   }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    fanout(spark, loadRaw(spark, dir, name), s"$dir/$name.parquet",
-      fanoutKey(name))
+    loadRaw(spark, dir, name)
 
-  /** [[load]] with the scan fan-out FORCED on (still size-gated) —
-    * used ONLY by the BPE family (r20). A broad "fan out every
-    * compute-dense leaf derivation" was measured and REJECTED the same
-    * way r19's global `spark.graft.scan.fanout=auto` was (same-JVM
+  /** [[load]] plus a size-gated scan fan-out: when the file's
+    * byte-planned split count would leave most cores idle, the loaded
+    * table is hash-repartitioned to the session's default parallelism
+    * (the "one huge unsplittable file" remedy — the testdata ships ONE
+    * parquet row group per table). Used ONLY by the
+    * BPE family (r20). Fan-out on every load was measured and REJECTED
+    * in r19 (same-JVM interleaved A/B over 12 queries at sf0.1/32
+    * cores: it LOST on 10 of 12, e.g. q_lm_trigram_backoff 2.65 →
+    * 3.84 s, q_token_rarity 1.10 → 1.45 s), and a broad "fan out every
+    * compute-dense leaf derivation" was REJECTED the same way (same-JVM
     * interleaved A/B over 12 leaf-heavy queries at sf0.1/32 cores:
     * fanout LOST on 10 — e.g. q_lm_trigram_backoff 2.59 → 3.05 s,
     * q_emb_kmeans 1.09 → 1.77 — because each pipeline's first keyed
@@ -97,7 +84,7 @@ object Tables {
     * bytes through an extra exchange. */
   def loadWide(spark: SparkSession, dir: String, name: String): DataFrame =
     fanout(spark, loadRaw(spark, dir, name), s"$dir/$name.parquet",
-      fanoutKey(name), force = true)
+      fanoutKey(name))
 
   /** Parquet SCHEMA memo per file path (r20) — metadata only, never
     * data or results: without it every `load` call re-runs driver-side

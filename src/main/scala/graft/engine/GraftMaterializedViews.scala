@@ -2,15 +2,16 @@ package graft.engine
 
 import graft.catalog.TableIdent
 import org.apache.spark.sql.{Column, DataFrame, GraftShims, Row, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedIdentifier}
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, EqualTo, Expression, Literal, NamedExpression}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, AttributeSet, EqualNullSafe, EqualTo, Expression, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Min, Sum}
-import org.apache.spark.sql.catalyst.plans.Inner
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan, Project, SubqueryAlias}
+import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, LeftOuter, LeftSemi, RightOuter}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Distinct, Filter, Join, JoinHint, LogicalPlan, Project, SubqueryAlias}
 import org.apache.spark.sql.connector.catalog.Identifier
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.{col, lit, struct, when}
+import org.apache.spark.storage.StorageLevel
 
 /** MATERIALIZED views over the engine: the MV is an ordinary catalog
   * TABLE carrying its defining SQL in table properties, refreshed
@@ -20,27 +21,39 @@ import org.apache.spark.sql.functions.{col, lit, struct, when}
   * logical node, `CreateMaterializedViewAsSelect`, that NO built-in
   * session catalog executes).
   *
-  * Refresh routing — the 100 TB story:
-  *  - when the defining query is a FOLDABLE aggregate (group-by keys +
-  *    any mix of count(*) / count(v) / sum(v) / avg(v) / min(v) /
-  *    max(v) / count(distinct v) over ONE graft table — or an inner
-  *    equi-join of two — with an optional deterministic WHERE),
-  *    refresh folds the source's CHANGELOG into the stored rows via
-  *    the [[ChangelogApply]] family: a 100 TB source with a 1 GB
-  *    daily delta pays 1 GB, never 100 TB, and the advanced source
-  *    checkpoint commits ATOMICALLY with the new content (crash-safe
-  *    exactly-once — a replayed refresh is a no-op);
-  *  - incremental WRITES are churn-sized too: the tick commits an
-  *    equality-delete of the touched keys plus their folded rows
-  *    ([[GraftTable.replaceKeys]]) — a 10⁹-key MV with 100 touched
-  *    keys writes ~100 rows, never the MV (added-records in the
-  *    snapshot summary is the observable bound);
-  *  - any other query shape falls back to a full recompute, still a
-  *    single CAS-guarded overwrite commit.
+  * One detector list ([[detect]]) maps the analyzed defining query to
+  * an [[MvShape]], cheapest tick first; `create` and `refresh` both go
+  * through it, and the shape's kind is the DESCRIBE-visible
+  * [[RefreshModeProp]]. Every refresh commits the new content and the
+  * advanced source checkpoints ATOMICALLY (a replayed tick is a
+  * no-op), and every incremental tick is churn-sized twice: its
+  * COMPUTE reads the delta plus the touched keys' files, and its WRITE
+  * equality-deletes the touched keys and lands their new rows
+  * ([[GraftTable.replaceKeys]]) — a 10⁹-key MV with 100 touched keys
+  * writes ~100 rows. There are three tick kinds:
+  *  - FOLD ([[FoldShape]], "incremental"): group-by keys + any mix of
+  *    count(*) / count(v) / sum(v) / avg(v) / min(v) / max(v) /
+  *    count(distinct v) over ONE graft table with an optional
+  *    deterministic WHERE — the source's CHANGELOG folds into the
+  *    stored rows through the [[ChangelogApply]] arithmetic;
+  *  - JOIN FOLD ([[JoinShape]], "incremental"): the same aggregates
+  *    over an inner single-attribute equi-join of two graft tables,
+  *    folded by the delta rules ΔA⋈B, A⋈ΔB, ΔA⋈ΔB;
+  *  - REBUILD ([[RecomputeOnTouch]], "incremental-rebuild"): the
+  *    defining PLAN re-executes over head-pinned sources restricted to
+  *    the group keys the deltas touched — HAVING, expressions over
+  *    aggregates, DISTINCT, expression (time-bucket) keys, outer joins,
+  *    N-ary inner trees, left-deep reporting chains and per-key
+  *    windows. One tick loop ([[refreshRebuild]]) owns checkpoints,
+  *    deltas and the commit; each shape supplies only its touched-key
+  *    cover and its restricted rebuild.
+  * Anything else is [[FullRecompute]] ("full"): every refresh is a
+  * single CAS-guarded overwrite commit.
   *
-  * The create-time population of a foldable MV is pinned AT the source
-  * snapshot recorded as its first checkpoint (scan-at-S + ckpt=S in one
-  * commit), so the first incremental refresh folds exactly the changes
+  * `create` is the backing table plus one tick: with no checkpoint
+  * recorded, a tick populates the MV from scans pinned AT the source
+  * heads and records those heads as its checkpoints in the same
+  * commit, so the first incremental refresh folds exactly the changes
   * after what the table holds — no create/refresh race window. */
 object GraftMaterializedViews {
 
@@ -77,6 +90,41 @@ object GraftMaterializedViews {
   case object Full extends RefreshMode
   case object NoOp extends RefreshMode
 
+  /** A detected defining-query shape: what `create` registers as the
+    * refresh mode and how every tick refreshes the MV. */
+  private[engine] sealed trait MvShape {
+    /** The [[RefreshModeProp]] value this shape registers. */
+    def mode: String
+    /** Positional rename of the OUT side: detection labels columns
+      * with the QUERY's output names, but the MV's backing table may
+      * carry user-declared names (`CREATE MATERIALIZED VIEW mv (k, n)
+      * AS SELECT key, count(*) …`) — reading and writing that table
+      * must use the declared names. */
+    def withOutNames(declared: Seq[String]): MvShape
+  }
+
+  /** Out of every incremental grammar: each tick recomputes the whole
+    * defining query. */
+  private[engine] final case class FullRecompute(
+      analyzed: LogicalPlan, declaredNames: Seq[String]) extends MvShape {
+    def mode: String = "full"
+    def withOutNames(declared: Seq[String]): FullRecompute = copy(declaredNames = declared)
+  }
+
+  // ------------------------------------------------------- detection
+  /** THE detector list, in order — cheaper ticks win: the arithmetic
+    * folds first, then the rebuild shapes (one table, two tables, an
+    * all-inner N-ary tree, a left-deep outer chain, a per-key window),
+    * then the full recompute. The rebuild detectors' grammars are
+    * disjoint (by relation count and by the peeled top node), so only
+    * the fold-before-rebuild order decides anything. */
+  private[engine] def detect(spark: SparkSession, analyzed: LogicalPlan): MvShape =
+    Iterator[(SparkSession, LogicalPlan) => Option[MvShape]](
+      shapeOf, joinShapeOf, rebuildExprShapeOf, rebuildJoinShapeOf,
+      rebuildMultiJoinShapeOf, rebuildChainShapeOf, rebuildWindowExprShapeOf)
+      .flatMap(_(spark, analyzed)).nextOption()
+      .getOrElse(FullRecompute(analyzed, analyzed.output.map(_.name)))
+
   // ----------------------------------------------------------- create
   private[engine] def create(
       spark: SparkSession,
@@ -102,275 +150,27 @@ object GraftMaterializedViews {
         userCols.lift(i).getOrElse(attr.name), attr.dataType, attr.nullable)
     }
     val mgr = spark.sessionState.catalogManager
-    // the shape's out-names are the QUERY's output names; remap them
-    // positionally to the DECLARED names so a user column list
-    // (CREATE MATERIALIZED VIEW mv (k, n) AS SELECT key, count(*)...)
-    // reads and writes the backing table it actually created
-    val shape = shapeOf(spark, analyzed).map(_.withOutNames(fields.map(_.name)))
-    val joinShape =
-      if (shape.isDefined) None
-      else joinShapeOf(spark, analyzed).map(_.withOutNames(fields.map(_.name)))
-    val rebuildShape =
-      if (shape.isDefined || joinShape.isDefined) None
-      else rebuildShapeOf(spark, analyzed).map(_.withOutNames(fields.map(_.name)))
-    val rebuildJoin =
-      if (shape.isDefined || joinShape.isDefined || rebuildShape.isDefined) None
-      else rebuildJoinShapeOf(spark, analyzed).map(_.withOutNames(fields.map(_.name)))
-    val rebuildMulti =
-      if (shape.isDefined || joinShape.isDefined || rebuildShape.isDefined ||
-        rebuildJoin.isDefined) None
-      else rebuildMultiJoinShapeOf(spark, analyzed).map(_.withOutNames(fields.map(_.name)))
-    val rebuildChain =
-      if (shape.isDefined || joinShape.isDefined || rebuildShape.isDefined ||
-        rebuildJoin.isDefined || rebuildMulti.isDefined) None
-      else rebuildChainShapeOf(spark, analyzed).map(_.withOutNames(fields.map(_.name)))
-    val rebuildExpr =
-      if (shape.isDefined || joinShape.isDefined || rebuildShape.isDefined ||
-        rebuildJoin.isDefined || rebuildMulti.isDefined || rebuildChain.isDefined) None
-      else rebuildExprShapeOf(spark, analyzed).map(_.withOutNames(fields.map(_.name)))
-    val rebuildJoinExpr =
-      if (shape.isDefined || joinShape.isDefined || rebuildShape.isDefined ||
-        rebuildJoin.isDefined || rebuildMulti.isDefined || rebuildChain.isDefined ||
-        rebuildExpr.isDefined) None
-      else rebuildJoinExprShapeOf(spark, analyzed).map(_.withOutNames(fields.map(_.name)))
-    val rebuildWindow =
-      if (shape.isDefined || joinShape.isDefined || rebuildShape.isDefined ||
-        rebuildJoin.isDefined || rebuildMulti.isDefined || rebuildChain.isDefined ||
-        rebuildExpr.isDefined || rebuildJoinExpr.isDefined) None
-      else rebuildWindowShapeOf(spark, analyzed).map(_.withOutNames(fields.map(_.name)))
-    val rebuildWindowExpr =
-      if (shape.isDefined || joinShape.isDefined || rebuildShape.isDefined ||
-        rebuildJoin.isDefined || rebuildMulti.isDefined || rebuildChain.isDefined ||
-        rebuildExpr.isDefined || rebuildJoinExpr.isDefined || rebuildWindow.isDefined) None
-      else rebuildWindowExprShapeOf(spark, analyzed).map(_.withOutNames(fields.map(_.name)))
+    val shape = detect(spark, analyzed).withOutNames(fields.map(_.name))
     val props = properties ++ Map(
       MarkerProp -> "true",
       SqlProp -> originalText,
       DefCatProp -> mgr.currentCatalog.name(),
       DefNsProp -> mgr.currentNamespace.mkString(NsSep),
-      // observability: DESCRIBE TABLE EXTENDED shows which price this
-      // MV pays per refresh — changelog fold ("incremental"),
-      // touched-key plan re-execution ("incremental-rebuild"), or full
-      // recompute
-      RefreshModeProp ->
-        (if (shape.isDefined || joinShape.isDefined) "incremental"
-         else if (rebuildShape.isDefined || rebuildJoin.isDefined ||
-           rebuildMulti.isDefined || rebuildChain.isDefined ||
-           rebuildExpr.isDefined || rebuildJoinExpr.isDefined ||
-           rebuildWindow.isDefined || rebuildWindowExpr.isDefined)
-           "incremental-rebuild"
-         else "full"))
+      RefreshModeProp -> shape.mode)
     // PARTITIONED BY flows straight through to the backing table: the
-    // fold's overwrite commits write through the table's default spec,
-    // so a partitioned MV gets partition pruning on its read side for free
+    // ticks' commits write through the table's default spec, so a
+    // partitioned MV gets partition pruning on its read side for free
     catalog.createTable(id, org.apache.spark.sql.types.StructType(fields),
       partitioning.toArray, props.asJava)
-    val ti = TableIdent(id.namespace().toSeq, id.name())
-    val mv = catalog.engineTable(ti)
-    shape match {
-      case Some(shape) =>
-        // pinned cold start: scan the source AT its head snapshot and
-        // commit content + that snapshot as the checkpoint atomically
-        val source = shape.sourceTable(spark)
-        source.metadata.currentSnapshotId match {
-          case Some(head) =>
-            val base = shape.applyFilter(
-              source.scan(spark, source.AtSnapshot(head)))
-            mv.overwriteAll(shape.recompute(base, fields.map(_.name)), None,
-              extraProperties = Map(
-                ChangelogApply.ckptKey(shape.sourceName) -> head.toString))
-          case None => // empty source: leave the MV empty, first refresh cold-starts
-        }
-      case None => joinShape match {
-        case Some(js) =>
-          // pinned cold start at BOTH heads, both checkpoints atomic
-          // with the content (the join twin of the branch above)
-          val lt = js.table(spark, js.leftIdent)
-          val rt = js.table(spark, js.rightIdent)
-          (lt.metadata.currentSnapshotId, rt.metadata.currentSnapshotId) match {
-            case (Some(lh), Some(rh)) =>
-              mv.overwriteAll(
-                js.recompute(lt.scan(spark, lt.AtSnapshot(lh)),
-                  rt.scan(spark, rt.AtSnapshot(rh)), fields.map(_.name)),
-                None,
-                extraProperties = Map(
-                  ChangelogApply.ckptKey(js.leftName) -> lh.toString,
-                  ChangelogApply.ckptKey(js.rightName) -> rh.toString))
-            case _ => // an empty side: inner join is empty, refresh cold-starts
-          }
-        case None => rebuildShape match {
-          case Some(rs) =>
-            // pinned cold start, rebuild-grammar twin of the branches
-            // above: execute the defining plan over the head-pinned
-            // scan, checkpoint committed with the content
-            val source = rs.sourceTable(spark)
-            source.metadata.currentSnapshotId match {
-              case Some(head) =>
-                mv.overwriteAll(
-                  rs.executeWith(spark, source.scan(spark, source.AtSnapshot(head))),
-                  None,
-                  extraProperties = Map(
-                    ChangelogApply.ckptKey(rs.sourceName) -> head.toString))
-              case None => // empty source: first refresh cold-starts
-            }
-          case None => rebuildJoin match {
-            case Some(rj) =>
-              val lt = rj.table(spark, rj.leftIdent)
-              val rt = rj.table(spark, rj.rightIdent)
-              val lHead = lt.metadata.currentSnapshotId
-              val rHead = rt.metadata.currentSnapshotId
-              // OUTER joins must populate even with a headless side
-              // (the preserved side still null-extends); INNER keeps
-              // the cold-start-on-refresh behavior an empty side had
-              if (lHead.isDefined && rHead.isDefined ||
-                  ((rj.preservesLeft || rj.preservesRight) &&
-                    (lHead.isDefined || rHead.isDefined))) {
-                def frameAt(t: GraftTable, h: Option[Long]) =
-                  h.map(id => t.scan(spark, t.AtSnapshot(id)))
-                    .getOrElse(t.scan(spark))
-                def headMark(h: Option[Long]): String =
-                  h.map(_.toString).getOrElse("none")
-                mv.overwriteAll(
-                  rj.rebuildFull(spark, frameAt(lt, lHead), frameAt(rt, rHead)),
-                  None,
-                  extraProperties = Map(
-                    ChangelogApply.ckptKey(rj.leftName) -> headMark(lHead),
-                    ChangelogApply.ckptKey(rj.rightName) -> headMark(rHead)))
-              }
-            case None => rebuildMulti match {
-              case Some(rmj) =>
-                val byName = rmj.idents.map(ti => rmj.nameOf(ti) -> ti)
-                  .distinctBy(_._1)
-                val tables = byName.map { case (n, ti) =>
-                  n -> rmj.table(spark, ti)
-                }.toMap
-                val heads = tables.map { case (n, t) =>
-                  n -> t.metadata.currentSnapshotId
-                }
-                // pinned cold start at ALL heads; any empty side makes
-                // the inner join empty — refresh cold-starts later
-                if (heads.values.forall(_.isDefined)) {
-                  val frames = rmj.idents.map { ti =>
-                    val n = rmj.nameOf(ti)
-                    val t = tables(n)
-                    t.scan(spark, t.AtSnapshot(heads(n).get))
-                  }
-                  mv.overwriteAll(rmj.rebuildFull(spark, frames), None,
-                    extraProperties = heads.map { case (n, h) =>
-                      ChangelogApply.ckptKey(n) -> h.get.toString
-                    }.toMap)
-                }
-              case None => rebuildChain match {
-                case Some(rcs) =>
-                  // pinned cold start at all heads; headless sides
-                  // scan empty (a LEFT level still null-extends, an
-                  // INNER level empties — both the plan's own truth)
-                  val byName = rcs.idents.map(ti => rcs.nameOf(ti) -> ti)
-                    .distinctBy(_._1)
-                  val tables = byName.map { case (n, ti) =>
-                    n -> rcs.table(spark, ti)
-                  }.toMap
-                  val heads = tables.map { case (n, t) =>
-                    n -> t.metadata.currentSnapshotId
-                  }
-                  if (heads.values.exists(_.isDefined)) {
-                    val frames = rcs.idents.map { ti =>
-                      val n = rcs.nameOf(ti)
-                      val t = tables(n)
-                      heads(n).map(id => t.scan(spark, t.AtSnapshot(id)))
-                        .getOrElse(t.scan(spark))
-                    }
-                    mv.overwriteAll(rcs.rebuildFull(spark, frames), None,
-                      extraProperties = heads.map { case (n, h) =>
-                        ChangelogApply.ckptKey(n) ->
-                          h.map(_.toString).getOrElse("none")
-                      }.toMap)
-                  }
-                case None => rebuildExprCreate()
-              }
-            }
-          }
-        }
-      }
-    }
-    def rebuildExprCreate(): Unit = {
-      rebuildExpr match {
-                case Some(re) =>
-                  // pinned cold start, the expr-keyed twin of the
-                  // single-table rebuild branch above
-                  val source = re.sourceTable(spark)
-                  source.metadata.currentSnapshotId match {
-                    case Some(head) =>
-                      mv.overwriteAll(
-                        re.rebuildFull(spark,
-                          source.scan(spark, source.AtSnapshot(head))),
-                        None,
-                        extraProperties = Map(
-                          ChangelogApply.ckptKey(re.sourceName) -> head.toString))
-                    case None => // empty source: first refresh cold-starts
-                  }
-                case None => rebuildJoinExpr match {
-                  case Some(rx) =>
-                    // pinned cold start at BOTH heads, the expr-keyed
-                    // twin of the two-table rebuild branch
-                    val lt = rx.table(spark, rx.leftIdent)
-                    val rt = rx.table(spark, rx.rightIdent)
-                    (lt.metadata.currentSnapshotId, rt.metadata.currentSnapshotId) match {
-                      case (Some(lh), Some(rh)) =>
-                        mv.overwriteAll(
-                          rx.rebuildFull(spark,
-                            lt.scan(spark, lt.AtSnapshot(lh)),
-                            rt.scan(spark, rt.AtSnapshot(rh))),
-                          None,
-                          extraProperties = Map(
-                            ChangelogApply.ckptKey(rx.leftName) -> lh.toString,
-                            ChangelogApply.ckptKey(rx.rightName) -> rh.toString))
-                      case _ => // an empty side: inner join empty, refresh cold-starts
-                    }
-                  case None => rebuildWindow match {
-                    case Some(rw) =>
-                      // pinned cold start — the window tier IS a
-                      // RebuildShape, same branch as the aggregate one
-                      val source = rw.sourceTable(spark)
-                      source.metadata.currentSnapshotId match {
-                        case Some(head) =>
-                          mv.overwriteAll(
-                            rw.executeWith(spark,
-                              source.scan(spark, source.AtSnapshot(head))),
-                            None,
-                            extraProperties = Map(
-                              ChangelogApply.ckptKey(rw.sourceName) -> head.toString))
-                        case None => // empty source: first refresh cold-starts
-                      }
-                    case None => rebuildWindowExpr match {
-                      case Some(rwe) =>
-                        // pinned cold start — the window-expr tier IS a
-                        // RebuildExprShape, same branch as the expr one
-                        val source = rwe.sourceTable(spark)
-                        source.metadata.currentSnapshotId match {
-                          case Some(head) =>
-                            mv.overwriteAll(
-                              rwe.rebuildFull(spark,
-                                source.scan(spark, source.AtSnapshot(head))),
-                              None,
-                              extraProperties = Map(
-                                ChangelogApply.ckptKey(rwe.sourceName) -> head.toString))
-                          case None => // empty source: first refresh cold-starts
-                        }
-                      case None =>
-                        val df = GraftShims.ofRows(spark, analyzed)
-                        mv.overwriteAll(df.toDF(fields.map(_.name): _*), None)
-                    }
-                  }
-                }
-      }
-    }
+    // pinned cold start: the first tick finds no checkpoint and
+    // populates at the source heads, checkpoints in the same commit
+    tick(spark, catalog.engineTable(TableIdent(id.namespace().toSeq, id.name())), shape)
   }
 
   // ---------------------------------------------------------- refresh
-  /** One refresh tick. Incremental when the stored SQL still matches a
-    * foldable shape AND the MV carries a checkpoint for that source;
-    * full recompute otherwise; NoOp when already current. */
+  /** One refresh tick of the MV's detected shape: incremental when the
+    * MV carries checkpoints for its sources, a full rebuild at the
+    * heads otherwise, NoOp when already current. */
   def refresh(
       spark: SparkSession,
       catalog: GraftSparkCatalog,
@@ -387,301 +187,186 @@ object GraftMaterializedViews {
     val parsed = GraftViewResolution.qualifyRelations(
       spark, spark.sessionState.sqlParser.parsePlan(sql), defCat, defNs)
     val analyzed = spark.sessionState.executePlan(parsed).analyzed
-    val outNames = mv.metadata.currentSchema.fields.map(_.name).toSeq
-
-    shapeOf(spark, analyzed).map(_.withOutNames(outNames)) match {
-      case Some(shape) =>
-        val source = shape.sourceTable(spark)
-        val srcHead = source.metadata.currentSnapshotId.getOrElse(return NoOp)
-        val key = ChangelogApply.ckptKey(shape.sourceName)
-        meta.properties.get(key).flatMap(_.toLongOption) match {
-          case Some(c) if c == srcHead => NoOp
-          case Some(c) =>
-            val changes = shape.applyFilter(
-              source.changelogScan(spark, c, Some(srcHead)))
-            def baseAtHead = shape.applyFilter(
-              source.scan(spark, source.AtSnapshot(srcHead)))
-            // churn-sized COMPUTE and churn-sized WRITE: the previous
-            // state is restricted to the touched keys before folding,
-            // and the commit equality-deletes those keys + lands the
-            // folded rows beside them (GraftTable.replaceKeys) — a
-            // tick's added files/records are bounded by churn, never
-            // by the MV's row count (overwriteAll would rewrite a
-            // 10⁹-key MV for a 100-key delta)
-            if (shape.keySrcNames.isEmpty) {
-              // GLOBAL aggregate (no GROUP BY): there is no key to
-              // replace rows by, and the MV is a single row — the
-              // overwrite IS churn-sized
-              val folded = shape.applyFold(
-                shape.toInternal(mv.scan(spark)), changes, baseAtHead)
-              mv.overwriteAll(shape.fromInternal(folded, outNames, mv),
-                meta.currentSnapshotId,
-                extraProperties = Map(key -> srcHead.toString,
-                  RefreshModeProp -> "incremental"))
-              return Incremental
-            }
-            val touched = changes.select(shape.keySrcNames.map(col): _*).distinct()
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              // read side prunes too: touched-key bounds prune the MV
-              // scan's FILE LISTING at plan time (manifest stats, via
-              // scanStatsPruned) and narrow rows inside kept files, so
-              // a localized churn reads candidate files, not the MV
-              val tb = ChangelogApply.touchedBoundsOf(
-                shape.touchedOut(touched), shape.keyOutNames)
-              val prevTouched = ChangelogApply.nullSafeJoin(
-                shape.toInternal(
-                  mv.scanStatsPruned(spark, tb.filters).filter(tb.residual)),
-                touched, shape.keySrcNames, "left_semi")
-              val folded = shape.applyFold(prevTouched, changes, baseAtHead)
-              mv.replaceKeys(spark, shape.keyOutNames,
-                shape.touchedOut(touched), shape.fromInternal(folded, outNames, mv),
-                meta.currentSnapshotId,
-                extraProperties = Map(key -> srcHead.toString,
-                  RefreshModeProp -> "incremental"))
-            } finally touched.unpersist(blocking = false)
-            Incremental
-          case None =>
-            val base = shape.applyFilter(
-              source.scan(spark, source.AtSnapshot(srcHead)))
-            mv.overwriteAll(shape.recompute(base, outNames),
-              meta.currentSnapshotId,
-              extraProperties = Map(key -> srcHead.toString,
-                RefreshModeProp -> "incremental"))
-            Full
-        }
-      case None =>
-        joinShapeOf(spark, analyzed).map(_.withOutNames(outNames)) match {
-          case Some(js) => refreshJoin(spark, mv, js, outNames)
-          case None =>
-            rebuildShapeOf(spark, analyzed).map(_.withOutNames(outNames)) match {
-              case Some(rs) => refreshRebuild(spark, mv, rs)
-              case None =>
-                rebuildJoinShapeOf(spark, analyzed).map(_.withOutNames(outNames)) match {
-                  case Some(rj) => refreshRebuildJoin(spark, mv, rj)
-                  case None =>
-                    rebuildMultiJoinShapeOf(spark, analyzed)
-                      .map(_.withOutNames(outNames)) match {
-                      case Some(rmj) => refreshRebuildMulti(spark, mv, rmj)
-                      case None =>
-                        rebuildChainShapeOf(spark, analyzed)
-                          .map(_.withOutNames(outNames)) match {
-                          case Some(rcs) => return refreshRebuildChain(spark, mv, rcs)
-                          case None => ()
-                        }
-                        rebuildExprShapeOf(spark, analyzed)
-                          .map(_.withOutNames(outNames)) match {
-                          case Some(re) => refreshRebuildExpr(spark, mv, re)
-                          case None =>
-                            rebuildJoinExprShapeOf(spark, analyzed)
-                              .map(_.withOutNames(outNames)) match {
-                              case Some(rx) => refreshRebuildJoinExpr(spark, mv, rx)
-                              case None =>
-                                rebuildWindowShapeOf(spark, analyzed)
-                                  .map(_.withOutNames(outNames)) match {
-                                  // the window tier IS a RebuildShape:
-                                  // same recompute-on-touch tick
-                                  case Some(rw) => refreshRebuild(spark, mv, rw)
-                                  case None =>
-                                    rebuildWindowExprShapeOf(spark, analyzed)
-                                      .map(_.withOutNames(outNames)) match {
-                                      // the window-EXPR tier IS a
-                                      // RebuildExprShape: same tick
-                                      case Some(rwe) =>
-                                        refreshRebuildExpr(spark, mv, rwe)
-                                      case None =>
-                                        val df = GraftShims.ofRows(spark, analyzed)
-                                        mv.overwriteAll(df.toDF(outNames: _*),
-                                          meta.currentSnapshotId,
-                                          extraProperties =
-                                            Map(RefreshModeProp -> "full"))
-                                        Full
-                                    }
-                                }
-                            }
-                        }
-                    }
-                }
-            }
-        }
-    }
+    tick(spark, mv,
+      detect(spark, analyzed).withOutNames(meta.currentSchema.fields.map(_.name).toSeq))
   }
 
-  /** One refresh tick for the generalized [[RebuildShape]] grammar —
-    * RECOMPUTE-ON-TOUCH: the defining plan re-executes over the
-    * head-pinned source restricted to the delta's touched group keys
-    * (null-safe semi-join; touched-key bounds pushed to the scan), and
-    * the commit replaces exactly those keys. No per-aggregate
-    * arithmetic is needed — HAVING, expressions over aggregates,
-    * multiple value columns, and DISTINCT projections all refresh at
-    * churn × per-key-group price, the same class as the
-    * count-distinct fold. A group whose rebuilt row fails a HAVING (or
-    * empties) simply produces no replacement row and drops out via the
-    * key delete. */
-  /** One refresh tick for [[RebuildJoinShape]]: NoOp when both
-    * checkpoints match the heads (absent-head markers included);
-    * otherwise derive the touched group keys from the cover terms the
-    * join type requires, rebuild them from the two head-pinned scans,
-    * and commit the keyed replacement with both advanced checkpoints.
-    *
-    * Cover terms. PAIR terms (join innerized) catch every joined pair
-    * that appeared or disappeared: ΔA⋈B@head, A@head⋈ΔB, and ΔA⋈ΔB
-    * when both sides moved — the bilinear cover. An OUTER join
-    * additionally changes NULL-EXTENDED rows, whose groups the pair
-    * terms cannot see; for each PRESERVED side S the tick adds
-    *  - nullExt(ΔS): a changed S row's null-extension may have
-    *    appeared or disappeared with the row itself, and
-    *  - nullExt(S@head ⋉cond Δother): an S row whose match-set a
-    *    changed other-side row entered or left may have flipped
-    *    between matched and null-extended.
-    * Both are delta-bounded; both are supersets of the truth, which
-    * the rebuild's recompute-on-touch makes safe by construction. */
-  private def refreshRebuildJoin(
-      spark: SparkSession, mv: GraftTable, rj: RebuildJoinShape): RefreshMode = {
-    val meta = mv.metadata
-    val lt = rj.table(spark, rj.leftIdent)
-    val rt = rj.table(spark, rj.rightIdent)
-    val lHead = lt.metadata.currentSnapshotId
-    val rHead = rt.metadata.currentSnapshotId
-    val kL = ChangelogApply.ckptKey(rj.leftName)
-    val kR = ChangelogApply.ckptKey(rj.rightName)
-    def headMark(h: Option[Long]): String = h.map(_.toString).getOrElse("none")
-    val ckpts = Map(
-      kL -> headMark(lHead), kR -> headMark(rHead),
-      RefreshModeProp -> "incremental-rebuild")
-    if (meta.properties.get(kL).contains(headMark(lHead)) &&
-        meta.properties.get(kR).contains(headMark(rHead))) return NoOp
-    if (lHead.isEmpty && rHead.isEmpty && rj.joinType == Inner) return NoOp
-
-    // a headless side reads as an EMPTY frame — for INNER that makes
-    // the join empty; for OUTER the preserved side still null-extends,
-    // so the full rebuild must execute the plan, not write empty
-    def frameAt(t: GraftTable, h: Option[Long]): DataFrame =
-      h.map(id => t.scan(spark, t.AtSnapshot(id))).getOrElse(t.scan(spark))
-    def fullAtHeads(): RefreshMode = {
-      mv.overwriteAll(
-        rj.rebuildFull(spark, frameAt(lt, lHead), frameAt(rt, rHead)),
-        meta.currentSnapshotId, extraProperties = ckpts)
-      Full
+  private def tick(spark: SparkSession, mv: GraftTable, shape: MvShape): RefreshMode =
+    shape match {
+      case fs: FoldShape => refreshFold(spark, mv, fs)
+      case js: JoinShape => refreshJoin(spark, mv, js)
+      case rs: RecomputeOnTouch => refreshRebuild(spark, mv, rs)
+      case FullRecompute(analyzed, declared) =>
+        mv.overwriteAll(GraftShims.ofRows(spark, analyzed).toDF(declared: _*),
+          mv.metadata.currentSnapshotId, extraProperties = Map(RefreshModeProp -> shape.mode))
+        Full
     }
 
-    val ckL = meta.properties.get(kL).flatMap(_.toLongOption)
-    val ckR = meta.properties.get(kR).flatMap(_.toLongOption)
-    (ckL, ckR, lHead, rHead) match {
-      case (Some(cl), Some(cr), Some(lh), Some(rh)) =>
-        // changelog rows as PLAIN source rows: for touched-key
-        // derivation the sign is irrelevant — any appearance means the
-        // key may have changed (self-join of one table: both deltas
-        // are the same range; the cover still holds)
-        def plainRows(t: GraftTable, from: Long, to: Long, rel: DataSourceV2Relation) =
-          t.changelogScan(spark, from, Some(to))
-            .select(rel.output.map(a => col(a.name)): _*)
-        val aHead = lt.scan(spark, lt.AtSnapshot(lh))
-        val bHead = rt.scan(spark, rt.AtSnapshot(rh))
-        val aMoved = cl != lh
-        val bMoved = cr != rh
-        // r16: persist each moved delta once (it feeds several cover
-        // terms plus its equi-key envelope aggregation), and bound
-        // the DERIVATION's head-side scans by the deltas' equi-join
-        // key min/max — a head row outside every linked delta's range
-        // cannot satisfy the equality against any delta row, so pair
-        // and match terms stay exact under the restriction. The
-        // null-extension terms read deltas only and are never
-        // restricted.
-        val eq = treeEquiPairs(rj.aggChild, Seq(rj.leftRel, rj.rightRel))
-        val dAF = if (aMoved) Some(plainRows(lt, cl, lh, rj.leftRel)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)) else None
-        val dBF = if (bMoved) Some(plainRows(rt, cr, rh, rj.rightRel)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)) else None
-        try {
-          val aStats = dAF.map(deltaEquiStats(_, equiColsOf(eq, 0)))
-          val bStats = dBF.map(deltaEquiStats(_, equiColsOf(eq, 1)))
-          val aLive = aMoved && aStats.exists(_.rows > 0L)
-          val bLive = bMoved && bStats.exists(_.rows > 0L)
-          val aSat = aStats.exists(equiSat(eq, _, 0))
-          val bSat = bStats.exists(equiSat(eq, _, 1))
-          def prunedHead(t: GraftTable, h: Long, bounds: Seq[(String, Any, Any)]): DataFrame =
-            prunedHeadScan(spark, t, h, bounds)
-          val terms = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-          if (aLive && aSat) {
-            terms += rj.pairKeysOf(spark, dAF.get,
-              prunedHead(rt, rh, equiBoundsFor(eq, 1, aStats.get)))
-            if (bLive && bSat) terms += rj.pairKeysOf(spark, dAF.get, dBF.get)
-          }
-          if (bLive && bSat) terms += rj.pairKeysOf(spark,
-            prunedHead(lt, lh, equiBoundsFor(eq, 0, bStats.get)), dBF.get)
-          if (rj.preservesLeft) {
-            if (aLive) terms += rj.nullExtKeys(rj.leftRel.outputSet, dAF.get)
-            if (bLive && bSat) terms += rj.nullExtKeys(rj.leftRel.outputSet,
-              rj.matchRows(spark, preservedIsLeft = true,
-                prunedHead(lt, lh, equiBoundsFor(eq, 0, bStats.get)), dBF.get))
-          }
-          if (rj.preservesRight) {
-            if (bLive) terms += rj.nullExtKeys(rj.rightRel.outputSet, dBF.get)
-            if (aLive && aSat) terms += rj.nullExtKeys(rj.rightRel.outputSet,
-              rj.matchRows(spark, preservedIsLeft = false,
-                prunedHead(rt, rh, equiBoundsFor(eq, 1, aStats.get)), dAF.get))
-          }
-          val touched =
-            (if (terms.isEmpty) rj.pairKeysOf(spark, aHead, bHead).limit(0)
-            else terms.reduceLeft(_ unionByName _)).distinct()
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            mv.replaceKeys(spark, rj.keyOutNames,
-              rj.touchedOut(touched),
-              rj.rebuild(spark, touched, aHead, bHead,
-                // the tick's scans prune their file listings by the
-                // touched bounds (churn-sized COMPUTE, not just write)
-                aPruned = Some(fs => lt.scanStatsPruned(spark, fs, lt.AtSnapshot(lh))),
-                bPruned = Some(fs => rt.scanStatsPruned(spark, fs, rt.AtSnapshot(rh)))),
-              meta.currentSnapshotId, extraProperties = ckpts)
-            Incremental
-          } finally touched.unpersist(blocking = false)
-        } finally Seq(dAF, dBF).flatten.foreach(_.unpersist(blocking = false))
-      case _ => fullAtHeads() // a checkpoint missing or a side headless
-    }
-  }
-
-  private def refreshRebuild(
-      spark: SparkSession, mv: GraftTable, rs: RebuildShape): RefreshMode = {
+  /** One tick of the single-table [[FoldShape]]: the source changelog
+    * since the checkpoint folds into the stored rows of its touched
+    * keys; no checkpoint → full recompute at the pinned head. */
+  private def refreshFold(spark: SparkSession, mv: GraftTable, shape: FoldShape): RefreshMode = {
     val meta = mv.metadata
-    val source = rs.sourceTable(spark)
+    val outNames = meta.currentSchema.fields.map(_.name).toSeq
+    val source = shape.sourceTable(spark)
     val srcHead = source.metadata.currentSnapshotId.getOrElse(return NoOp)
-    val key = ChangelogApply.ckptKey(rs.sourceName)
+    val key = ChangelogApply.ckptKey(shape.sourceName)
+    val ckpts = Map(key -> srcHead.toString, RefreshModeProp -> shape.mode)
     meta.properties.get(key).flatMap(_.toLongOption) match {
       case Some(c) if c == srcHead => NoOp
       case Some(c) =>
-        val changes = source.changelogScan(spark, c, Some(srcHead))
-        // touched = keys of ANY changed row (no WHERE narrowing: a
-        // superset is safe — an untouched-in-truth key rebuilds to its
-        // identical row); consumed three times → persist
-        val touched = changes.select(rs.keySrcNames.map(col): _*).distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val changes = shape.applyFilter(
+          source.changelogScan(spark, c, Some(srcHead)))
+        def baseAtHead = shape.applyFilter(
+          source.scan(spark, source.AtSnapshot(srcHead)))
+        // churn-sized COMPUTE and churn-sized WRITE: the previous
+        // state is restricted to the touched keys before folding,
+        // and the commit equality-deletes those keys + lands the
+        // folded rows beside them (GraftTable.replaceKeys) — a
+        // tick's added files/records are bounded by churn, never
+        // by the MV's row count (overwriteAll would rewrite a
+        // 10⁹-key MV for a 100-key delta)
+        if (shape.keySrcNames.isEmpty) {
+          // GLOBAL aggregate (no GROUP BY): there is no key to
+          // replace rows by, and the MV is a single row — the
+          // overwrite IS churn-sized
+          val folded = shape.applyFold(
+            shape.toInternal(mv.scan(spark)), changes, baseAtHead)
+          mv.overwriteAll(shape.fromInternal(folded, outNames, mv),
+            meta.currentSnapshotId, extraProperties = ckpts)
+          return Incremental
+        }
+        val touched = changes.select(shape.keySrcNames.map(col): _*).distinct()
+          .persist(StorageLevel.MEMORY_AND_DISK)
         try {
-          // plan-time file pruning on the pinned source scan: the
-          // bounds prune the listing (manifest stats), the residual
-          // narrows rows, the null-safe semi stays the exactness gate
-          val tb = ChangelogApply.touchedBoundsOf(touched, rs.keySrcNames)
-          val pinned = source
-            .scanStatsPruned(spark, tb.filters, source.AtSnapshot(srcHead))
-            .filter(tb.residual)
-          val restricted = ChangelogApply.nullSafeJoin(
-            pinned, touched, rs.keySrcNames, "left_semi")
-          mv.replaceKeys(spark, rs.keyOutNames,
-            rs.touchedOut(touched), rs.executeWith(spark, restricted),
-            meta.currentSnapshotId,
-            extraProperties = Map(key -> srcHead.toString,
-              RefreshModeProp -> "incremental-rebuild"))
-          Incremental
+          // read side prunes too: touched-key bounds prune the MV
+          // scan's FILE LISTING at plan time (manifest stats, via
+          // scanStatsPruned) and narrow rows inside kept files, so
+          // a localized churn reads candidate files, not the MV
+          val tb = ChangelogApply.touchedBoundsOf(
+            shape.touchedOut(touched), shape.keyOutNames)
+          val prevTouched = ChangelogApply.nullSafeJoin(
+            shape.toInternal(
+              mv.scanStatsPruned(spark, tb.filters).filter(tb.residual)),
+            touched, shape.keySrcNames, "left_semi")
+          val folded = shape.applyFold(prevTouched, changes, baseAtHead)
+          mv.replaceKeys(spark, shape.keyOutNames,
+            shape.touchedOut(touched), shape.fromInternal(folded, outNames, mv),
+            meta.currentSnapshotId, extraProperties = ckpts)
         } finally touched.unpersist(blocking = false)
+        Incremental
       case None =>
-        mv.overwriteAll(
-          rs.executeWith(spark, source.scan(spark, source.AtSnapshot(srcHead))),
-          meta.currentSnapshotId,
-          extraProperties = Map(key -> srcHead.toString,
-            RefreshModeProp -> "incremental-rebuild"))
+        val base = shape.applyFilter(
+          source.scan(spark, source.AtSnapshot(srcHead)))
+        mv.overwriteAll(shape.recompute(base, outNames),
+          meta.currentSnapshotId, extraProperties = ckpts)
         Full
     }
+  }
+
+  // ------------------------------------------------ the rebuild tick
+  /** One rebuild tick's inputs, indexed by relation INSTANCE (a
+    * self-join reads its table once per instance): table, checkpoint
+    * and head snapshot, and each MOVED instance's changelog as PLAIN
+    * source rows — for touched-key derivation the sign is irrelevant,
+    * any appearance means the key may have changed — persisted once,
+    * since it feeds several cover terms plus its equi-key envelope
+    * ([[DeltaEquiStats]], computed on first use). Frames a shape
+    * persists through [[persist]] are released when the tick ends. */
+  private[engine] final class Tick(
+      val spark: SparkSession,
+      val tables: Seq[GraftTable],
+      val ckpts: Seq[Long],
+      val heads: Seq[Long],
+      rels: Seq[DataSourceV2Relation],
+      /** the join tree's attr = attr conjuncts ([[treeEquiPairs]]) */
+      val eq: Seq[(Int, String, Int, String)]) {
+    private val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def persist(df: DataFrame): DataFrame = {
+      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+      held += p
+      p
+    }
+    def release(): Unit = held.foreach(_.unpersist(blocking = false))
+
+    val deltas: Map[Int, DataFrame] = tables.indices
+      .filter(i => ckpts(i) != heads(i))
+      .map(i => i -> persist(tables(i).changelogScan(spark, ckpts(i), Some(heads(i)))
+        .select(rels(i).output.map(a => col(a.name)): _*)))
+      .toMap
+    lazy val stats: Map[Int, DeltaEquiStats] =
+      deltas.map { case (i, d) => i -> deltaEquiStats(d, equiColsOf(eq, i)) }
+
+    private def at(i: Int, snap: Long): DataFrame = {
+      val t = tables(i)
+      t.scan(spark, t.AtSnapshot(snap))
+    }
+    lazy val headFrames: Seq[DataFrame] = tables.indices.map(i => at(i, heads(i)))
+    lazy val ckptFrames: Seq[DataFrame] = tables.indices.map(i => at(i, ckpts(i)))
+    /** Per instance, a file-pruned scan constructor at the heads (or
+      * at the checkpoints) — the tick's scans prune their listings by
+      * touched or envelope bounds. */
+    def prunedHeads: Seq[Option[Seq[org.apache.spark.sql.sources.Filter] => DataFrame]] =
+      prunedAt(heads)
+    def prunedCkpts: Seq[Option[Seq[org.apache.spark.sql.sources.Filter] => DataFrame]] =
+      prunedAt(ckpts)
+    private def prunedAt(snaps: Seq[Long]) = tables.zip(snaps).map { case (t, snap) =>
+      Some((fs: Seq[org.apache.spark.sql.sources.Filter]) =>
+        t.scanStatsPruned(spark, fs, t.AtSnapshot(snap)))
+    }
+  }
+
+  /** One refresh tick for every [[RecomputeOnTouch]] shape. NoOp when
+    * every source checkpoint matches its head, or when every source is
+    * still empty. A missing checkpoint (the create-time cold start) or
+    * a headless source: full rebuild at the heads — a headless side
+    * reads as an EMPTY frame, which for an INNER join makes the result
+    * empty while an OUTER join's preserved side still null-extends, so
+    * the plan executes rather than writing empty. Otherwise: the
+    * shape's touched keys (persisted), its rebuild restricted to them,
+    * and one keyed replacement commit advancing every checkpoint
+    * atomically. An absent head checkpoints as an explicit "none"
+    * marker — otherwise a persistently-empty side would fail the
+    * currency check and commit a fresh identical overwrite EVERY tick. */
+  private def refreshRebuild(
+      spark: SparkSession, mv: GraftTable, rs: RecomputeOnTouch): RefreshMode = {
+    val meta = mv.metadata
+    val names = rs.idents.map(rs.nameOf)
+    val tables = rs.idents.zip(names).distinctBy(_._2)
+      .map { case (ti, n) => n -> rs.table(spark, ti) }.toMap
+    val heads = tables.map { case (n, t) => n -> t.metadata.currentSnapshotId }
+    def headMark(h: Option[Long]): String = h.map(_.toString).getOrElse("none")
+    val ckpts = heads.map { case (n, h) => ChangelogApply.ckptKey(n) -> headMark(h) } +
+      (RefreshModeProp -> rs.mode)
+    if (heads.forall { case (n, h) =>
+      meta.properties.get(ChangelogApply.ckptKey(n)).contains(headMark(h))
+    }) return NoOp
+    if (heads.values.forall(_.isEmpty)) return NoOp
+
+    val marks = heads.map { case (n, h) =>
+      n -> (meta.properties.get(ChangelogApply.ckptKey(n)).flatMap(_.toLongOption), h)
+    }
+    val moved = names.count(n => marks(n)._1 != marks(n)._2)
+    if (!marks.values.forall { case (c, h) => c.isDefined && h.isDefined } ||
+        !rs.coverable(moved)) {
+      val frames = names.map { n =>
+        val t = tables(n)
+        heads(n).map(h => t.scan(spark, t.AtSnapshot(h))).getOrElse(t.scan(spark))
+      }
+      mv.overwriteAll(rs.rebuildFull(spark, frames),
+        meta.currentSnapshotId, extraProperties = ckpts)
+      return Full
+    }
+    val tick = new Tick(spark, names.map(tables),
+      names.map(n => marks(n)._1.get), names.map(n => marks(n)._2.get),
+      rs.rels, treeEquiPairs(rs.aggChild, rs.rels))
+    try {
+      val touched = tick.persist(rs.touchedKeys(tick).distinct())
+      mv.replaceKeys(spark, rs.keyOutNames, rs.touchedOut(touched),
+        rs.rebuildTouched(tick, touched),
+        meta.currentSnapshotId, extraProperties = ckpts)
+      Incremental
+    } finally tick.release()
   }
 
   /** One refresh tick for the two-table [[JoinShape]]: NoOp when both
@@ -690,10 +375,9 @@ object GraftMaterializedViews {
     * at the two pinned heads when both moved or either checkpoint is
     * missing. Both checkpoints commit ATOMICALLY with the content —
     * the same exactly-once construct as the single-table tick. */
-  private def refreshJoin(
-      spark: SparkSession, mv: GraftTable,
-      js: JoinShape, outNames: Seq[String]): RefreshMode = {
+  private def refreshJoin(spark: SparkSession, mv: GraftTable, js: JoinShape): RefreshMode = {
     val meta = mv.metadata
+    val outNames = meta.currentSchema.fields.map(_.name).toSeq
     val lt = js.table(spark, js.leftIdent)
     val rt = js.table(spark, js.rightIdent)
     val lHead = lt.metadata.currentSnapshotId
@@ -709,7 +393,7 @@ object GraftMaterializedViews {
     def headMark(h: Option[Long]): String = h.map(_.toString).getOrElse("none")
     val ckpts = Map(
       kL -> headMark(lHead), kR -> headMark(rHead),
-      RefreshModeProp -> "incremental")
+      RefreshModeProp -> js.mode)
     if (meta.properties.get(kL).contains(headMark(lHead)) &&
         meta.properties.get(kR).contains(headMark(rHead))) return NoOp
 
@@ -840,7 +524,9 @@ object GraftMaterializedViews {
       sourceIdent: TableIdent,
       filter: Option[Expression], // unresolved-by-name, deterministic
       outs: Seq[OutCol],
-      valueSrc: Option[String]) {
+      valueSrc: Option[String]) extends MvShape {
+
+    def mode: String = "incremental"
 
     def sourceName: String = s"$catalogName.${sourceIdent.namespace.mkString(".")}.${sourceIdent.name}"
     def keySrcNames: Seq[String] = outs.collect { case k: KeyOut => k.srcName }
@@ -852,11 +538,8 @@ object GraftMaterializedViews {
     def touchedOut(touched: DataFrame): DataFrame =
       touched.select(keyOuts.map(k => col(k.srcName).as(k.outName)): _*)
 
-    /** Positional rename of the OUT side: [[shapeOf]] labels columns
-      * with the QUERY's output names, but the MV's backing table may
-      * carry user-declared names — reading/writing that table must use
-      * the declared names. `outs` is 1:1 positional with the analyzed
-      * output, so a zip is exact. */
+    /** `outs` is 1:1 positional with the analyzed output, so the
+      * rename is an exact zip. */
     def withOutNames(declared: Seq[String]): FoldShape =
       copy(outs = outs.zip(declared).map {
         case (k: KeyOut, n) => k.copy(outName = n)
@@ -1097,7 +780,9 @@ object GraftMaterializedViews {
       rightCols: Seq[String],
       /** post-join, name-based (right join key rewritten to left's) */
       filter: Option[Expression],
-      agg: FoldShape) {
+      agg: FoldShape) extends MvShape {
+
+    def mode: String = agg.mode
 
     def leftName: String =
       s"$catalogName.${leftIdent.namespace.mkString(".")}.${leftIdent.name}"
@@ -1171,35 +856,126 @@ object GraftMaterializedViews {
       agg.recompute(baseFrame(lScan, rScan), outNames)
   }
 
-  /** The GENERALIZED single-table incremental shape (r14) — the tier
-    * between the arithmetic folds and full recompute. Grammar: any
-    * `[Filter | Project]*` chain over ONE `Aggregate` over
-    * `[Filter]` over one graft table, where every node is
-    * deterministic and every group key is a plain source attribute
-    * still exposed (possibly aliased) in the final output. No
-    * per-aggregate arithmetic exists for this grammar (HAVING prunes
-    * the stored state, expressions over aggregates aren't invertible),
-    * but RECOMPUTE-ON-TOUCH doesn't need any: re-execute the defining
-    * PLAN over the pinned base restricted to the touched keys, and
-    * replace exactly those keys. Correct for ANY deterministic
-    * aggregate because it IS the defining query, scoped to the groups
-    * that could have changed. */
-  // ------------------------- rebuild tier: shared plan machinery
-  /** Peel the deterministic `[Filter | Project]*` chain down to ONE
-    * aggregate; SELECT DISTINCT analyzes to a Distinct node — its
-    * implicit aggregate groups by (and emits) its child's output. */
-  private def peelToAggregate(p: LogicalPlan): Option[(Seq[Expression], LogicalPlan)] =
-    p match {
-      case f: Filter if f.condition.deterministic => peelToAggregate(strip(f.child))
-      case pr: Project if pr.projectList.forall(_.deterministic) =>
-        peelToAggregate(strip(pr.child))
-      case a: Aggregate
-          if a.aggregateExpressions.forall(_.deterministic) =>
-        Some((a.groupingExpressions, a.child))
-      case d: org.apache.spark.sql.catalyst.plans.logical.Distinct =>
-        Some((strip(d.child).output, d.child))
-      case _ => None
+  // ------------------------------------------------ the rebuild shapes
+  /** A shape refreshed by RECOMPUTE-ON-TOUCH: no per-aggregate
+    * arithmetic — the defining PLAN re-executes over the head-pinned
+    * sources restricted to the group keys the tick's deltas touched,
+    * and the commit replaces exactly those keys. Correct for any
+    * deterministic aggregate or per-key window because it IS the
+    * defining query, scoped to the groups that could have changed: a
+    * group whose rebuilt row fails a HAVING (or empties) produces no
+    * replacement row and drops out via the key delete, and a touched
+    * SUPERSET is always safe (an untouched-in-truth key rebuilds to
+    * its identical row). [[refreshRebuild]] drives every tick; a shape
+    * supplies its relation instances, its touched-key cover and its
+    * restricted rebuild. */
+  private[engine] sealed trait RecomputeOnTouch extends MvShape {
+    def catalogName: String
+    /** Relation instances in plan order (a self-join lists its table
+      * once per instance). */
+    def rels: Seq[DataSourceV2Relation]
+    def analyzed: LogicalPlan
+    /** The aggregate's input (a window's relation): touched keys
+      * evaluate over it, and its join tree's equalities bound the
+      * deltas' envelopes. */
+    def aggChild: LogicalPlan
+    /** Group keys as relation-level expressions — a plain attribute is
+      * the identity case — each with the touched-frame column that
+      * carries it. */
+    def keys: Seq[(Expression, String)]
+    def keyOutIdx: Seq[Int]
+    def declaredNames: Seq[String]
+    /** Group-key tuples the tick's deltas may have changed. */
+    def touchedKeys(t: Tick): DataFrame
+    /** The defining plan at the heads, restricted to `touched`. */
+    def rebuildTouched(t: Tick, touched: DataFrame): DataFrame
+    /** Is the touched cover worth deriving for this many moved
+      * instances? When not, the tick rebuilds in full. */
+    def coverable(moved: Int): Boolean = true
+
+    final def mode: String = "incremental-rebuild"
+    def keyOutNames: Seq[String] = keyOutIdx.map(declaredNames)
+    def idents: Seq[TableIdent] = rels.map { r =>
+      TableIdent(r.identifier.get.namespace().toSeq, r.identifier.get.name())
     }
+    def nameOf(ti: TableIdent): String =
+      s"$catalogName.${ti.namespace.mkString(".")}.${ti.name}"
+    def table(spark: SparkSession, ti: TableIdent): GraftTable =
+      GraftShims.catalogPlugin(spark, Some(catalogName))
+        .asInstanceOf[GraftSparkCatalog].engineTable(ti)
+
+    /** Touched-key frame → the MV's declared key names — what
+      * [[GraftTable.replaceKeys]] equality-deletes. */
+    def touchedOut(touched: DataFrame): DataFrame =
+      touched.select(keys.map(_._2).zip(keyOutNames)
+        .map { case (s, o) => col(s).as(o) }: _*)
+
+    /** `plan` with each relation instance replaced by its frame
+      * (matched by attribute ids, so self-join instances stay apart). */
+    def substitute(plan: LogicalPlan, frames: Seq[DataFrame]): LogicalPlan = {
+      val byOutput = rels.zip(frames)
+      plan.transformUp {
+        case r: DataSourceV2Relation =>
+          byOutput.find(_._1.output == r.output) match {
+            case Some((rel, frame)) => restoreAttrs(rel, frame)
+            case None => r
+          }
+      }
+    }
+
+    /** Unrestricted re-execution (cold start / full at the heads). */
+    def rebuildFull(spark: SparkSession, frames: Seq[DataFrame]): DataFrame =
+      GraftShims.ofRows(spark, substitute(analyzed, frames)).toDF(declaredNames: _*)
+
+    /** Re-execute the defining plan at `frames` (optionally rewritten
+      * by `reshape`) with a null-safe LeftSemi on `touched` injected
+      * directly above the aggregate's input — the exactness gate over
+      * per-side restrictions, whose projections are rectangular and
+      * can admit key tuples outside `touched`. */
+    def rebuildAt(
+        spark: SparkSession, touched: DataFrame, frames: Seq[DataFrame],
+        reshape: LogicalPlan => LogicalPlan = identity): DataFrame = {
+      val groupExprs = keys.map(_._1)
+      val touchedPlan = touched.queryExecution.analyzed
+      val cond = groupExprs.zip(touchedPlan.output)
+        .map { case (g, t) => EqualNullSafe(g, t): Expression }
+        .reduceLeft(And(_, _))
+      def gate(child: LogicalPlan) =
+        Join(child, touchedPlan, LeftSemi, Some(cond), JoinHint.NONE)
+      val gated = reshape(substitute(analyzed, frames)).transformUp {
+        case a: Aggregate if a.groupingExpressions == groupExprs => a.copy(child = gate(a.child))
+        case d: Distinct if d.child.output.size == groupExprs.size &&
+            d.child.output.zip(groupExprs).forall { case (o, g) => o.semanticEquals(g) } =>
+          d.copy(child = gate(d.child))
+      }
+      GraftShims.ofRows(spark, gated).toDF(declaredNames: _*)
+    }
+  }
+
+  /** The aggregate a rebuild shape re-executes: its group keys, its
+    * outputs and its input. */
+  private final case class AggNode(
+      groupExprs: Seq[Expression], outputs: Seq[NamedExpression], child: LogicalPlan)
+
+  /** Peel the deterministic `[Filter | Project]*` chain down to ONE
+    * aggregate; SELECT DISTINCT analyzes to a Distinct node — an
+    * implicit aggregate grouping by (and emitting) its child's output. */
+  private def peelAggNode(p: LogicalPlan): Option[AggNode] = p match {
+    case f: Filter if f.condition.deterministic => peelAggNode(strip(f.child))
+    case pr: Project if pr.projectList.forall(_.deterministic) =>
+      peelAggNode(strip(pr.child))
+    case a: Aggregate if a.aggregateExpressions.forall(_.deterministic) =>
+      Some(AggNode(a.groupingExpressions, a.aggregateExpressions, a.child))
+    case d: Distinct => Some(AggNode(d.child.output, d.child.output, d.child))
+    case _ => None
+  }
+
+  /** `p` as a graft-catalog relation with an identifier, or None. */
+  private def graftRel(p: LogicalPlan): Option[DataSourceV2Relation] = p match {
+    case r: DataSourceV2Relation if r.identifier.isDefined &&
+        r.catalog.exists(_.isInstanceOf[GraftSparkCatalog]) => Some(r)
+    case _ => None
+  }
 
   /** Below the aggregate: pass-through column pruning and
     * deterministic filters are fine; anything else is out of grammar
@@ -1212,28 +988,19 @@ object GraftMaterializedViews {
     case r => r
   }
 
-  /** For each final output position, the exprId of the underlying
-    * pass-through attribute (None for computed columns). */
-  private def originsOf(p: LogicalPlan)
+  /** For each final output position, the exprId of the AGGREGATE
+    * output attribute it passes through (None for columns computed
+    * above the aggregate) — computed aggregate outputs like
+    * `length(status) AS l` included. */
+  private def originsToAgg(p: LogicalPlan)
       : Seq[Option[org.apache.spark.sql.catalyst.expressions.ExprId]] = p match {
-    case a: Aggregate => a.aggregateExpressions.map {
-      case ar: AttributeReference => Some(ar.exprId)
-      case Alias(ar: AttributeReference, _) => Some(ar.exprId)
-      case _ => None
-    }
-    case f: Filter => originsOf(strip(f.child))
-    case s: SubqueryAlias => originsOf(strip(s))
-    // Window output = child.output ++ windowExpressions.map(_.toAttribute)
-    case w: org.apache.spark.sql.catalyst.plans.logical.Window =>
-      originsOf(strip(w.child)) ++ w.windowExpressions.map(_ => None)
-    // window-tier plans recurse all the way to the relation (aggregate
-    // plans stop at the Aggregate node and never reach here)
-    case r: DataSourceV2Relation => r.output.map(a => Some(a.exprId))
-    case d: org.apache.spark.sql.catalyst.plans.logical.Distinct =>
-      strip(d.child).output.map(a => Some(a.exprId))
+    case a: Aggregate => a.aggregateExpressions.map(ne => Some(ne.toAttribute.exprId))
+    case d: Distinct => d.child.output.map(a => Some(a.exprId))
+    case f: Filter => originsToAgg(strip(f.child))
+    case s: SubqueryAlias => originsToAgg(strip(s))
     case pr: Project =>
       val child = strip(pr.child)
-      val below = originsOf(child)
+      val below = originsToAgg(child)
       val idx = child.output.map(_.exprId).zipWithIndex.toMap
       pr.projectList.map {
         case ar: AttributeReference => idx.get(ar.exprId).flatMap(below)
@@ -1243,28 +1010,40 @@ object GraftMaterializedViews {
     case other => other.output.map(_ => None)
   }
 
-  /** Validate the group keys (plain attrs, non-empty, distinct names,
-    * source columns of `sourceOut`) and locate each in the final
-    * output — or None (→ full). */
-  private def traceKeys(
-      analyzed: LogicalPlan,
-      groupExprs: Seq[Expression],
-      sourceOut: org.apache.spark.sql.catalyst.expressions.AttributeSet)
-      : Option[(Seq[AttributeReference], Seq[Int])] = {
-    val groupAttrs = groupExprs.map {
-      case a: AttributeReference => a
-      case _ => return None // grouping on expressions: full (v1 boundary)
+  /** Where each group key surfaces: the aggregate output exposing it
+    * (whose name is the key's touched-frame column) and that output's
+    * position in the final output — None when a key is not exposed
+    * (no column to address its rows by) or two keys share a name. */
+  private def exposedKeys(analyzed: LogicalPlan, agg: AggNode)
+      : Option[(Seq[String], Seq[Int])] = {
+    val exposed = agg.groupExprs.map { g =>
+      agg.outputs.find {
+        case a: AttributeReference => g.semanticEquals(a)
+        case Alias(e, _) => e.semanticEquals(g)
+        case _ => false
+      }.getOrElse(return None)
     }
-    if (groupAttrs.isEmpty) return None // no key to replace rows by
-    if (groupAttrs.map(_.name).distinct.size != groupAttrs.size) return None
-    if (!groupAttrs.forall(sourceOut.contains)) return None
-    val outOrigins = originsOf(strip(analyzed))
-    val keyOutIdx = groupAttrs.map { g =>
-      val i = outOrigins.indexWhere(_.contains(g.exprId))
-      if (i < 0) return None // a group key not exposed: can't address rows
+    val names = exposed.map(_.name)
+    if (names.distinct.size != names.size) return None
+    val traced = originsToAgg(strip(analyzed))
+    val keyOutIdx = exposed.map { o =>
+      val i = traced.indexWhere(_.contains(o.toAttribute.exprId))
+      if (i < 0) return None
       i
     }
-    Some((groupAttrs, keyOutIdx))
+    Some((names, keyOutIdx))
+  }
+
+  /** The attribute-keyed grammar of the N-ary and chain shapes: every
+    * group key a plain, distinctly named source attribute of
+    * `sourceOut`, exposed in the output — or None (→ full). */
+  private def attrKeys(analyzed: LogicalPlan, agg: AggNode, sourceOut: AttributeSet)
+      : Option[(Seq[AttributeReference], Seq[Int])] = {
+    val attrs = agg.groupExprs.collect { case a: AttributeReference => a }
+    if (attrs.isEmpty || attrs.size != agg.groupExprs.size) return None
+    if (attrs.map(_.name).distinct.size != attrs.size) return None
+    if (!attrs.forall(sourceOut.contains)) return None
+    exposedKeys(analyzed, agg).map { case (_, keyOutIdx) => (attrs, keyOutIdx) }
   }
 
   /** Wrap `frame` (same column names/types as `rel` — a pinned scan or
@@ -1280,107 +1059,15 @@ object GraftMaterializedViews {
       sub)
   }
 
-  private[engine] final case class RebuildShape(
-      catalogName: String,
-      sourceIdent: TableIdent,
-      relation: DataSourceV2Relation,
-      analyzed: LogicalPlan,
-      keySrcNames: Seq[String],
-      keyOutIdx: Seq[Int],
-      declaredNames: Seq[String]) {
-
-    def sourceName: String =
-      s"$catalogName.${sourceIdent.namespace.mkString(".")}.${sourceIdent.name}"
-    def keyOutNames: Seq[String] = keyOutIdx.map(declaredNames)
-    def withOutNames(declared: Seq[String]): RebuildShape =
-      copy(declaredNames = declared)
-
-    def sourceTable(spark: SparkSession): GraftTable = {
-      val plugin = GraftShims.catalogPlugin(spark, Some(catalogName))
-      plugin.asInstanceOf[GraftSparkCatalog].engineTable(sourceIdent)
-    }
-
-    def touchedOut(touched: DataFrame): DataFrame =
-      touched.select(keySrcNames.zip(keyOutNames)
-        .map { case (s, o) => col(s).as(o) }: _*)
-
-    /** Execute the defining plan with the source relation substituted
-      * by `frame` (a pinned scan, optionally touched-key restricted).
-      * Output is renamed positionally to the MV's declared columns. */
-    def executeWith(spark: SparkSession, frame: DataFrame): DataFrame = {
-      val restored = restoreAttrs(relation, frame)
-      val swapped = analyzed.transformUp {
-        case r: DataSourceV2Relation if r.output == relation.output => restored
-      }
-      GraftShims.ofRows(spark, swapped).toDF(declaredNames: _*)
-    }
-  }
-
-  /** WINDOW-keyed rebuild tier (r17): `[Project|Filter]*` over ONE
-    * Window node — every window expression partitioned by the SAME
-    * plain source attributes — over `[Filter|pass-through Project]*`
-    * over one graft relation. This is the top-k / latest-row-per-key
-    * operational MV spelled the way people actually spell it:
-    * {{{
-    *   SELECT k, v, payload FROM (
-    *     SELECT *, row_number() OVER (PARTITION BY k ORDER BY v DESC) rn
-    *     FROM t) WHERE rn <= 3
-    * }}}
-    * (also rank/dense_rank filters, per-key lag/lead views). It reuses
-    * [[RebuildShape]] — and therefore [[refreshRebuild]]'s tick —
-    * UNCHANGED, because a window partitioned by K computes each
-    * K-group from that group's rows alone: re-running the plan over
-    * the touched partitions' COMPLETE head-pinned row set yields
-    * exactly those keys' true rows. Runner-up resurrection is free —
-    * a deleted rank-1 row's runner-up rides back in because the whole
-    * partition recomputes, the same reason the min/max fold recomputes
-    * deleted keys. Boundaries (→ full refresh, honest): multiple
-    * Window nodes or mixed partition specs (a window over a COARSER
-    * key could read rows outside the touched partitions), empty
-    * partition spec (global window), expression partitions, keys not
-    * exposed in the output (nothing to address the replacement by). */
-  private[engine] def rebuildWindowShapeOf(
-      spark: SparkSession, analyzed: LogicalPlan): Option[RebuildShape] = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-    def peelToWindow(p: LogicalPlan): Option[LWindow] = strip(p) match {
-      case w: LWindow => Some(w)
-      case f: Filter if f.condition.deterministic => peelToWindow(f.child)
-      case pr: Project if pr.projectList.forall(_.deterministic) =>
-        peelToWindow(pr.child)
-      case _ => None
-    }
-    val w = peelToWindow(analyzed).getOrElse(return None)
-    // exactly one Window node: anything window-shaped below is a
-    // different (possibly coarser) partitioning — full fallback
-    if (w.child.exists(_.isInstanceOf[LWindow])) return None
-    if (!w.windowExpressions.forall(_.deterministic)) return None
-    if (!w.orderSpec.forall(_.deterministic)) return None
-    val rel = belowChain(w.child) match {
-      case r: DataSourceV2Relation if r.identifier.isDefined &&
-          r.catalog.exists(_.isInstanceOf[GraftSparkCatalog]) => r
-      case _ => return None
-    }
-    val (keyAttrs, keyOutIdx) =
-      traceKeys(analyzed, w.partitionSpec, rel.outputSet).getOrElse(return None)
-    val ident = rel.identifier.get
-    Some(RebuildShape(
-      rel.catalog.get.name(),
-      TableIdent(ident.namespace().toSeq, ident.name()),
-      rel, analyzed,
-      keyAttrs.map(_.name), keyOutIdx,
-      analyzed.output.map(_.name)))
-  }
-
   /** For each output position of `p`, the RELATION-LEVEL expression it
     * computes — every intermediate alias inlined down to the single
     * graft relation's attributes — plus that relation. None per
     * position for window-function outputs and anything else that does
     * not resolve to pure relation-attribute expressions; None overall
     * when the tree is out of grammar (joins, aggregates, non-
-    * deterministic nodes). The expression twin of [[originsOf]]: the
-    * analyzer EXTRACTS expression window keys into a computing Project
-    * below the Window (`_w0`), which the pass-through grammar cannot
-    * see through — this can. */
+    * deterministic nodes). The analyzer EXTRACTS expression window
+    * keys into a computing Project below the Window (`_w0`), which a
+    * pass-through grammar cannot see through — this can. */
   private def relationLevelOutputs(p: LogicalPlan)
       : Option[(Seq[Option[Expression]], DataSourceV2Relation)] = strip(p) match {
     case r: DataSourceV2Relation =>
@@ -1420,542 +1107,55 @@ object GraftMaterializedViews {
     if (ok) Some(inlined) else None
   }
 
-  /** WINDOW tier, EXPRESSION partitions (r18): the same top-k /
-    * latest-row-per-key operational shape as [[rebuildWindowShapeOf]]
-    * but `PARTITION BY <deterministic expressions>` — the day-bucketed
-    * leaderboard:
-    * {{{
-    *   SELECT date_trunc('day', ts) AS day, k, v, rn FROM (
-    *     SELECT *, row_number() OVER (
-    *       PARTITION BY date_trunc('day', ts) ORDER BY v DESC) rn
-    *     FROM t) WHERE rn <= 3
-    * }}}
-    * The analyzer extracts expression keys into a computing Project
-    * below the Window (`_w0`), so the attribute tier's pass-through
-    * grammar never reaches the relation; this detector inlines the
-    * below-chain aliases to recover each partition key as a
-    * RELATION-LEVEL expression and reuses the expression-keyed rebuild
-    * machinery — [[RebuildExprShape]] with `sourceGate = true`, ticked
-    * by [[refreshRebuildExpr]]: touched tuples evaluated over the
-    * changelog's plain rows, the rebuild's window input restricted at
-    * the source to rows whose tuple is touched (EXACT: a row's
-    * partition tuple is a deterministic function of the row, so the
-    * touched partitions recompute from their complete row sets —
-    * runner-up resurrection included), the tick's scan file-pruned
-    * through [[InvertibleKeyBounds]] whenever the bucketing inverts
-    * (`date_trunc` does), and a replaceKeys commit addressed by the
-    * exposed key columns. Boundaries (→ full, honest): multiple or
-    * nested Window nodes, mixed specs across window expressions, empty
-    * partition spec, a key not exposed in the output, a key whose
-    * below-chain resolution fails. */
-  private[engine] def rebuildWindowExprShapeOf(
-      spark: SparkSession, analyzed: LogicalPlan): Option[RebuildExprShape] = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-    def peelToWindow(p: LogicalPlan): Option[LWindow] = strip(p) match {
-      case w: LWindow => Some(w)
-      case f: Filter if f.condition.deterministic => peelToWindow(f.child)
-      case pr: Project if pr.projectList.forall(_.deterministic) =>
-        peelToWindow(pr.child)
-      case _ => None
-    }
-    val w = peelToWindow(analyzed).getOrElse(return None)
-    if (w.child.exists(_.isInstanceOf[LWindow])) return None
-    if (!w.windowExpressions.forall(_.deterministic)) return None
-    if (!w.orderSpec.forall(_.deterministic)) return None
-    if (w.partitionSpec.isEmpty) return None // global window: full
-    if (!w.partitionSpec.forall(_.deterministic)) return None
-    val (childOuts, rel) = relationLevelOutputs(w.child).getOrElse(return None)
-    if (!(rel.identifier.isDefined &&
-        rel.catalog.exists(_.isInstanceOf[GraftSparkCatalog]))) return None
-    val byId = w.child.output.map(_.exprId).zip(childOuts).toMap
-    val groupExprs = w.partitionSpec.map(e =>
-      inlineToRelation(e, byId).getOrElse(return None))
-    if (!groupExprs.forall(_.references.subsetOf(rel.outputSet))) return None
-    // exposure: each key tuple component must be addressable in the
-    // final output (replaceKeys deletes/reinserts by those columns)
-    val (outExprs, _) = relationLevelOutputs(analyzed).getOrElse(return None)
-    val keyOutIdx = groupExprs.map { g =>
-      val i = outExprs.indexWhere(_.exists(_.semanticEquals(g)))
-      if (i < 0) return None
-      i
-    }
-    if (keyOutIdx.distinct.size != keyOutIdx.size) return None
-    val declared = analyzed.output.map(_.name)
-    val keyNames = keyOutIdx.map(declared)
-    if (keyNames.distinct.size != keyNames.size) return None
-    val ident = rel.identifier.get
-    Some(RebuildExprShape(
-      rel.catalog.get.name(),
-      TableIdent(ident.namespace().toSeq, ident.name()),
-      rel, analyzed,
-      // touched tuples evaluate over PLAIN delta rows (below-chain
-      // filters skipped — a superset of the true touched set is safe)
-      rel, groupExprs, keyNames, keyOutIdx, declared,
-      sourceGate = true))
-  }
+  /** The keys of `keys` computed from one side's attributes alone. */
+  private def keysOn(keys: Seq[(Expression, String)], sideOut: AttributeSet)
+      : Seq[(Expression, String)] =
+    keys.filter { case (e, _) => e.references.nonEmpty && e.references.subsetOf(sideOut) }
 
-  /** Analyzed plan → [[RebuildShape]], or None. Checked AFTER the
-    * arithmetic fold shapes (cheaper ticks win). */
-  private[engine] def rebuildShapeOf(
-      spark: SparkSession, analyzed: LogicalPlan): Option[RebuildShape] = {
-    val (groupExprs, aggChild) = peelToAggregate(strip(analyzed)).getOrElse(return None)
-    belowChain(aggChild) match {
-      case r: DataSourceV2Relation if r.identifier.isDefined &&
-          r.catalog.exists(_.isInstanceOf[GraftSparkCatalog]) =>
-        val (groupAttrs, keyOutIdx) =
-          traceKeys(analyzed, groupExprs, r.outputSet).getOrElse(return None)
-        val ident = r.identifier.get
-        Some(RebuildShape(
-          r.catalog.get.name(),
-          TableIdent(ident.namespace().toSeq, ident.name()),
-          r, analyzed,
-          groupAttrs.map(_.name), keyOutIdx,
-          analyzed.output.map(_.name)))
-      case _ => None
-    }
-  }
-
-  /** The rebuild tier over a TWO-TABLE inner join (r14): the same
-    * recompute-on-touch discipline for `[Filter|Project]*` over one
-    * aggregate over `[Filter|Project]*` over `a INNER JOIN b` (ANY
-    * deterministic join condition — the rebuild re-executes the plan,
-    * so nothing restricts it to single-attribute equi-joins the way
-    * the arithmetic fold is). Touched group keys are derived by the
-    * same bilinear cover the fold path proves: every joined pair that
-    * appeared or disappeared since the checkpoints shows up in
-    * ΔA⋈B@head ∪ A@head⋈ΔB ∪ ΔA⋈ΔB — each term evaluated by
-    * substituting the plan BELOW the aggregate (so the defining WHERE
-    * and join condition apply) and projecting the group keys. The
-    * rebuild then re-executes the FULL plan at the two pinned heads
-    * with a null-safe LeftSemi on the touched keys injected directly
-    * above the aggregate's child. INNER only: an outer join's
-    * null-extended rows can change for keys outside this cover. */
-  private[engine] final case class RebuildJoinShape(
-      catalogName: String,
-      leftIdent: TableIdent,
-      rightIdent: TableIdent,
-      leftRel: DataSourceV2Relation,
-      rightRel: DataSourceV2Relation,
-      analyzed: LogicalPlan,
-      aggChild: LogicalPlan,
-      groupAttrs: Seq[AttributeReference],
-      keyOutIdx: Seq[Int],
-      declaredNames: Seq[String],
-      joinType: org.apache.spark.sql.catalyst.plans.JoinType,
-      leftChild: LogicalPlan,
-      rightChild: LogicalPlan,
-      joinCond: Option[Expression]) {
-
-    import org.apache.spark.sql.catalyst.plans.{FullOuter, LeftOuter, RightOuter}
-
-    /** Does the join preserve unmatched rows of this side (LEFT
-      * preserves its left, FULL both)? Preserved-side rows can appear
-      * NULL-EXTENDED in the output — the semantics the outer-join
-      * cover terms and the restriction policy both hinge on. */
-    def preservesLeft: Boolean = joinType == LeftOuter || joinType == FullOuter
-    def preservesRight: Boolean = joinType == RightOuter || joinType == FullOuter
-
-    def leftName: String =
-      s"$catalogName.${leftIdent.namespace.mkString(".")}.${leftIdent.name}"
-    def rightName: String =
-      s"$catalogName.${rightIdent.namespace.mkString(".")}.${rightIdent.name}"
-    def keySrcNames: Seq[String] = groupAttrs.map(_.name)
-    def keyOutNames: Seq[String] = keyOutIdx.map(declaredNames)
-    def withOutNames(declared: Seq[String]): RebuildJoinShape =
-      copy(declaredNames = declared)
-
-    def table(spark: SparkSession, ti: TableIdent): GraftTable = {
-      val plugin = GraftShims.catalogPlugin(spark, Some(catalogName))
-      plugin.asInstanceOf[GraftSparkCatalog].engineTable(ti)
-    }
-
-    def touchedOut(touched: DataFrame): DataFrame =
-      touched.select(keySrcNames.zip(keyOutNames)
-        .map { case (s, o) => col(s).as(o) }: _*)
-
-    private def substitute(
-        plan: LogicalPlan, aFrame: DataFrame, bFrame: DataFrame): LogicalPlan =
-      plan.transformUp {
-        case r: DataSourceV2Relation if r.output == leftRel.output =>
-          restoreAttrs(leftRel, aFrame)
-        case r: DataSourceV2Relation if r.output == rightRel.output =>
-          restoreAttrs(rightRel, bFrame)
-      }
-
-    /** Group keys of one PAIR cover term: the plan below the aggregate
-      * with the sides substituted and the join INNERIZED, projected to
-      * the group-key attrs. Innerizing matters for the outer grammar:
-      * a delta-vs-head term evaluated with the plan's own OUTER join
-      * would null-extend every unmatched head row and blow the touched
-      * set up to the whole base — pairs come from the inner core, and
-      * null-extension changes are covered by [[nullExtKeys]] terms. */
-    def pairKeysOf(spark: SparkSession, aFrame: DataFrame, bFrame: DataFrame): DataFrame = {
-      val innerized = aggChild.transformUp {
-        case j: Join if j.joinType != Inner => j.copy(joinType = Inner)
-      }
-      GraftShims.ofRows(spark, substitute(innerized, aFrame, bFrame))
-        .select(groupAttrs.map(a => GraftShims.column(a).as(a.name)): _*)
-    }
-
-    /** The NULL-EXTENSION key of a preserved side's rows: that side's
-      * group-key columns taken verbatim, every OTHER side's group key
-      * as a typed NULL — the group a row lands in when it has no join
-      * match. Cover terms feed this with (a) the side's delta rows
-      * (their null-extension may have appeared/disappeared) and (b)
-      * the side's head rows whose match-set changed ([[matchRows]]).
-      * A SUPERSET is safe: an untouched-in-truth key rebuilds to its
-      * identical row, and a key with no rows simply deletes. */
-    def nullExtKeys(
-        sideOut: org.apache.spark.sql.catalyst.expressions.AttributeSet,
-        rows: DataFrame): DataFrame =
-      rows.select(groupAttrs.map { g =>
-        if (sideOut.contains(g)) col(g.name).as(g.name)
-        else lit(null).cast(g.dataType).as(g.name)
-      }: _*)
-
-    /** Rows of the PRESERVED side (its join-child plan at `headFrame`)
-      * that match the OTHER side's delta under the join condition — a
-      * LeftSemi on the defining ON clause, so any a-row whose match-set
-      * a ΔB row could have entered or left is found, delta-bounded. */
-    def matchRows(
-        spark: SparkSession, preservedIsLeft: Boolean,
-        headFrame: DataFrame, deltaFrame: DataFrame): DataFrame = {
-      import org.apache.spark.sql.catalyst.plans.LeftSemi
-      import org.apache.spark.sql.catalyst.plans.logical.{Join => LJoin, JoinHint}
-      val (keep, probe) =
-        if (preservedIsLeft)
-          (substitute(leftChild, headFrame, headFrame),
-            substitute(rightChild, deltaFrame, deltaFrame))
-        else
-          (substitute(rightChild, headFrame, headFrame),
-            substitute(leftChild, deltaFrame, deltaFrame))
-      GraftShims.ofRows(spark,
-        LJoin(keep, probe, LeftSemi, joinCond, JoinHint.NONE))
-    }
-
-    /** Restrict ONE side's head-pinned scan to rows that can
-      * contribute to a touched group — the churn-sizing of the tick's
-      * COMPUTE, not just its write: a group key that originates from
-      * side S takes its value verbatim from the S row (traceKeys
-      * admits only plain pass-through attributes), so an S row whose
-      * key-column subtuple is absent from `touched`'s projection onto
-      * S's keys cannot feed any touched group. The projection's
-      * min/max bounds push down to the DSv2 scan (manifest-stats file
-      * pruning) and the null-safe semi is the row-level gate — the
-      * same construction as the single-table rebuild. A side that
-      * originates NO group key stays full: its rows join against the
-      * other side's already-restricted rows, so the join stays
-      * churn-bounded whenever at least one side carries keys. */
-    private def restrictSide(
-        frame: DataFrame, touched: DataFrame,
-        sideOut: org.apache.spark.sql.catalyst.expressions.AttributeSet,
-        prunedScan: Option[Seq[org.apache.spark.sql.sources.Filter] => DataFrame])
-        : DataFrame =
-      GraftMaterializedViews.restrictFrame(groupAttrs, frame, touched, sideOut, prunedScan)
-
-    /** Re-execute the full defining plan at the substituted sides,
-      * with the touched-key restriction applied at BOTH levels:
-      * per-side scan restriction ([[restrictSide]] — bounds pushed to
-      * the scans, so a tick's join is churn-sized, never
-      * full-join-sized) and a null-safe LeftSemi injected above the
-      * (single) aggregate's child as the exactness gate (the per-side
-      * projections are rectangular — their cross product can admit
-      * key TUPLES outside `touched`, which the semi drops). */
-    def rebuild(
-        spark: SparkSession, touched: DataFrame,
-        aFrame: DataFrame, bFrame: DataFrame,
-        aPruned: Option[Seq[org.apache.spark.sql.sources.Filter] => DataFrame] = None,
-        bPruned: Option[Seq[org.apache.spark.sql.sources.Filter] => DataFrame] = None)
-        : DataFrame = {
-      import org.apache.spark.sql.catalyst.expressions.{And, EqualNullSafe}
-      import org.apache.spark.sql.catalyst.plans.LeftSemi
-      import org.apache.spark.sql.catalyst.plans.logical.{Join => LJoin, JoinHint}
-      val touchedPlan = touched.queryExecution.analyzed
-      val cond = groupAttrs.zip(touchedPlan.output)
-        .map { case (g, t) => EqualNullSafe(g, t): Expression }
-        .reduceLeft(And(_, _))
-      // RESTRICTION POLICY by join type: restricting a side is exact
-      // only when removing its rows cannot FABRICATE output rows. For
-      // INNER joins removing any row only removes pairs — both sides
-      // restrict. For an OUTER join, removing rows of a NON-preserved
-      // side can turn a matched preserved row into a spurious
-      // null-extended one, which could land in a legitimately-touched
-      // (…, NULL) group and corrupt its rebuild — so only sides whose
-      // unmatched rows the join does NOT preserve against may stay
-      // unrestricted: LEFT restricts its left, RIGHT its right, FULL
-      // neither (the above-aggregate semi remains the exactness gate
-      // and the only restriction).
-      val restrictA = joinType == Inner || joinType ==
-        org.apache.spark.sql.catalyst.plans.LeftOuter
-      val restrictB = joinType == Inner || joinType ==
-        org.apache.spark.sql.catalyst.plans.RightOuter
-      // a side is NARROWED only when the policy allows AND it actually
-      // originates a group key (restrictSide is the identity otherwise)
-      val aNarrowed = restrictA && groupAttrs.exists(leftRel.outputSet.contains)
-      val bNarrowed = restrictB && groupAttrs.exists(rightRel.outputSet.contains)
-      val aR = if (aNarrowed) restrictSide(aFrame, touched, leftRel.outputSet, aPruned)
-        else aFrame
-      val bR = if (bNarrowed) restrictSide(bFrame, touched, rightRel.outputSet, bPruned)
-        else bFrame
-      // r16 ENVELOPE: an un-narrowed, NON-PRESERVED side only matters
-      // where it matches the narrowed companion — bound it by the
-      // companion's direct equi-join-column stats (exact: dropping
-      // non-matching rows of a non-preserved side cannot add or remove
-      // output rows over the companion). Kills the rebuild's last
-      // full dim scan in LEFT/RIGHT-join ticks and keyless-side inner
-      // ticks; FULL OUTER keeps both sides whole.
-      val eq = GraftMaterializedViews.treeEquiPairs(aggChild, Seq(leftRel, rightRel))
-      val bFinal =
-        if (!bNarrowed && !preservesRight && aNarrowed)
-          GraftMaterializedViews.companionBounds(eq, 1, 0, aR) match {
-            case Left(()) => bR.limit(0)
-            case Right(bs) => GraftMaterializedViews.applyBounds(bR, bPruned, bs)
-          }
-        else bR
-      val aFinal =
-        if (!aNarrowed && !preservesLeft && bNarrowed)
-          GraftMaterializedViews.companionBounds(eq, 0, 1, bR) match {
-            case Left(()) => aR.limit(0)
-            case Right(bs) => GraftMaterializedViews.applyBounds(aR, aPruned, bs)
-          }
-        else aR
-      val swapped = substitute(analyzed, aFinal, bFinal)
-      val restricted = swapped.transformUp {
-        case a: Aggregate if a.groupingExpressions == (groupAttrs: Seq[Expression]) =>
-          a.copy(child = LJoin(a.child, touchedPlan, LeftSemi, Some(cond), JoinHint.NONE))
-        case d: org.apache.spark.sql.catalyst.plans.logical.Distinct
-            if strip(d.child).output == groupAttrs =>
-          d.copy(child = LJoin(d.child, touchedPlan, LeftSemi, Some(cond), JoinHint.NONE))
-      }
-      GraftShims.ofRows(spark, restricted).toDF(declaredNames: _*)
-    }
-
-    /** Unrestricted re-execution (cold start / full-at-heads). */
-    def rebuildFull(
-        spark: SparkSession, aFrame: DataFrame, bFrame: DataFrame): DataFrame =
-      GraftShims.ofRows(spark, substitute(analyzed, aFrame, bFrame))
-        .toDF(declaredNames: _*)
+  /** `frame`'s rows whose key tuple is in `touched`: a null-safe semi
+    * evaluating each key expression over `frame`'s columns (by name)
+    * against the touched column carrying it. */
+  private def keySemi(
+      frame: DataFrame, touched: DataFrame, keys: Seq[(Expression, String)]): DataFrame = {
+    val cond = keys.map { case (e, n) =>
+      GraftShims.column(e.transformUp {
+        case a: AttributeReference => UnresolvedAttribute(Seq("__nsl", a.name))
+      }) <=> col(s"__nsr.$n")
+    }.reduce(_ && _)
+    frame.alias("__nsl").join(touched.alias("__nsr"), cond, "left_semi")
   }
 
   /** Restrict one side's frame to rows that can contribute to a
-    * touched group: null-safe semi against the touched keys projected
-    * onto THIS side's group-key columns, with the projection's min/max
-    * bounds both pruning the FILE LISTING (via `prunedScan` —
-    * [[GraftTable.scanStatsPruned]], supplied by the ticks) and
-    * narrowing rows. Exact for any side whose removal cannot fabricate
-    * output rows (every inner-join side; an outer join's restrictable
-    * side — see the caller's policy). A side that originates no group
-    * key stays as given. */
+    * touched group: the keys computed from THIS side's attributes take
+    * their value from the side's row, so a row whose key subtuple is
+    * absent from `touched`'s projection cannot feed any touched group.
+    * The projection's inverted bounds prune the FILE LISTING (via
+    * `prunedScan` — [[GraftTable.scanStatsPruned]], supplied by the
+    * tick) and a null-safe semi is the row gate. Exact for any side
+    * whose removal cannot fabricate output rows (every inner-join
+    * side; an outer join's restrictable side — see the callers'
+    * policy). A side that computes no key stays as given. */
   private[engine] def restrictFrame(
-      groupAttrs: Seq[AttributeReference],
+      keys: Seq[(Expression, String)],
       frame: DataFrame, touched: DataFrame,
-      sideOut: org.apache.spark.sql.catalyst.expressions.AttributeSet,
+      sideOut: AttributeSet,
       prunedScan: Option[Seq[org.apache.spark.sql.sources.Filter] => DataFrame])
       : DataFrame = {
-    val sideKeys = groupAttrs.filter(sideOut.contains).map(_.name)
+    val sideKeys = keysOn(keys, sideOut)
     if (sideKeys.isEmpty) frame
     else {
-      val proj = touched.select(sideKeys.map(col): _*).distinct()
-      val tb = ChangelogApply.touchedBoundsOf(proj, sideKeys)
-      val bounded = prunedScan match {
-        case Some(scanWith) => scanWith(tb.filters).filter(tb.residual)
-        case None => frame.filter(tb.residual)
+      val proj = touched.select(sideKeys.map(k => col(k._2)): _*).distinct()
+      val bounded = invertedTouchedFilters(proj, sideKeys) match {
+        case Left(()) => frame.limit(0)
+        case Right(Nil) => frame
+        case Right(fs) => prunedScan.fold(frame)(_(fs))
       }
-      ChangelogApply.nullSafeJoin(bounded, proj, sideKeys, "left_semi")
+      keySemi(bounded, proj, sideKeys)
     }
   }
 
-  /** Analyzed plan → [[RebuildJoinShape]], or None. Checked after the
-    * join FOLD shape (cheaper ticks win). INNER and the three OUTER
-    * join types qualify (r15 — outer joins get null-extension cover
-    * terms in the tick); an outer join with a non-deterministic ON
-    * routes to full like everything else out of grammar. */
-  private[engine] def rebuildJoinShapeOf(
-      spark: SparkSession, analyzed: LogicalPlan): Option[RebuildJoinShape] = {
-    import org.apache.spark.sql.catalyst.plans.{FullOuter, LeftOuter, RightOuter}
-    val (groupExprs, aggChild) = peelToAggregate(strip(analyzed)).getOrElse(return None)
-    belowChain(aggChild) match {
-      case Join(l0, r0, jt @ (Inner | LeftOuter | RightOuter | FullOuter), cond, _)
-          if cond.forall(_.deterministic) =>
-        (belowChain(l0), belowChain(r0)) match {
-          case (lr: DataSourceV2Relation, rr: DataSourceV2Relation)
-              if lr.identifier.isDefined && rr.identifier.isDefined &&
-                lr.catalog.exists(_.isInstanceOf[GraftSparkCatalog]) &&
-                rr.catalog.exists(_.isInstanceOf[GraftSparkCatalog]) &&
-                lr.catalog.get.name() == rr.catalog.get.name() =>
-            val (groupAttrs, keyOutIdx) = traceKeys(analyzed, groupExprs,
-              lr.outputSet ++ rr.outputSet).getOrElse(return None)
-            val li = lr.identifier.get
-            val ri = rr.identifier.get
-            Some(RebuildJoinShape(
-              lr.catalog.get.name(),
-              TableIdent(li.namespace().toSeq, li.name()),
-              TableIdent(ri.namespace().toSeq, ri.name()),
-              lr, rr, analyzed, aggChild,
-              groupAttrs, keyOutIdx,
-              analyzed.output.map(_.name),
-              jt, l0, r0, cond))
-          case _ => None
-        }
-      case _ => None
-    }
-  }
-
-  /** Peel the deterministic `[Filter | Project]*` chain down to the
-    * Aggregate NODE itself (the expr-keyed shape needs its
-    * aggregateExpressions to locate each group expression's exposed
-    * alias, not just the grouping list). */
-  private def peelAggNode(p: LogicalPlan): Option[Aggregate] = p match {
-    case f: Filter if f.condition.deterministic => peelAggNode(strip(f.child))
-    case pr: Project if pr.projectList.forall(_.deterministic) =>
-      peelAggNode(strip(pr.child))
-    case a: Aggregate if a.aggregateExpressions.forall(_.deterministic) => Some(a)
-    case _ => None
-  }
-
-  /** For each final output position, the exprId of the AGGREGATE
-    * output attribute it passes through (None for columns computed
-    * above the aggregate) — the aggregate-level twin of [[originsOf]],
-    * which resolves to SOURCE attrs and so cannot see computed
-    * aggregate outputs like `length(status) AS l`. */
-  private def originsToAgg(p: LogicalPlan)
-      : Seq[Option[org.apache.spark.sql.catalyst.expressions.ExprId]] = p match {
-    case a: Aggregate => a.aggregateExpressions.map(ne => Some(ne.toAttribute.exprId))
-    case f: Filter => originsToAgg(strip(f.child))
-    case s: SubqueryAlias => originsToAgg(strip(s))
-    case pr: Project =>
-      val child = strip(pr.child)
-      val below = originsToAgg(child)
-      val idx = child.output.map(_.exprId).zipWithIndex.toMap
-      pr.projectList.map {
-        case ar: AttributeReference => idx.get(ar.exprId).flatMap(below)
-        case Alias(ar: AttributeReference, _) => idx.get(ar.exprId).flatMap(below)
-        case _ => None
-      }
-    case other => other.output.map(_ => None)
-  }
-
-  /** The EXPRESSION-KEYED rebuild tier (r15): `GROUP BY <deterministic
-    * expressions>` over one graft table, each group expression EXPOSED
-    * (possibly aliased) in the output. No stored column set can
-    * file-prune by an expression's value, so the tick's source scan
-    * is FULL — but the aggregate's input is restricted to rows whose
-    * group-expression TUPLE is touched (a null-safe semi evaluated per
-    * row), so the aggregate state is churn-sized and the commit
-    * replaces exactly the touched expression values
-    * ([[GraftTable.replaceKeys]] on the exposed columns). Strictly
-    * better than the full recompute this shape previously routed to:
-    * same scan, churn-sized shuffle and write. Touched values derive
-    * by evaluating the group expressions over the changelog's plain
-    * rows through the defining plan's own below-aggregate chain. */
-  private[engine] final case class RebuildExprShape(
-      catalogName: String,
-      sourceIdent: TableIdent,
-      relation: DataSourceV2Relation,
-      analyzed: LogicalPlan,
-      aggChild: LogicalPlan,
-      groupExprs: Seq[Expression],
-      keyNames: Seq[String],
-      keyOutIdx: Seq[Int],
-      declaredNames: Seq[String],
-      /** r18, the WINDOW-expression tier: gate the rebuild's touched
-        * semi at the SOURCE relation instead of above an Aggregate —
-        * a row's partition tuple is a deterministic function of the
-        * row, so restricting source rows to touched tuples keeps
-        * exactly the touched window partitions' complete row sets. */
-      sourceGate: Boolean = false) {
-
-    def sourceName: String =
-      s"$catalogName.${sourceIdent.namespace.mkString(".")}.${sourceIdent.name}"
-    def keyOutNames: Seq[String] = keyOutIdx.map(declaredNames)
-    def withOutNames(declared: Seq[String]): RebuildExprShape =
-      copy(declaredNames = declared)
-
-    def sourceTable(spark: SparkSession): GraftTable = {
-      val plugin = GraftShims.catalogPlugin(spark, Some(catalogName))
-      plugin.asInstanceOf[GraftSparkCatalog].engineTable(sourceIdent)
-    }
-
-    private def substitute(plan: LogicalPlan, frame: DataFrame): LogicalPlan =
-      plan.transformUp {
-        case r: DataSourceV2Relation if r.output == relation.output =>
-          restoreAttrs(relation, frame)
-      }
-
-    def touchedOut(touched: DataFrame): DataFrame =
-      touched.select(keyNames.zip(keyOutNames)
-        .map { case (s, o) => col(s).as(o) }: _*)
-
-    /** Touched group-expression tuples of a delta: the below-aggregate
-      * chain over the delta's plain rows, projected to the group
-      * expressions (their own filters apply — a superset is safe). */
-    def touchedOf(spark: SparkSession, deltaRows: DataFrame): DataFrame =
-      GraftShims.ofRows(spark, substitute(aggChild, deltaRows))
-        .select(groupExprs.zip(keyNames)
-          .map { case (e, n) => GraftShims.column(e).as(n) }: _*)
-
-    /** Re-execute the defining plan at `frame`, with the aggregate's
-      * INPUT restricted to rows whose group-expression tuple is in
-      * `touched` (null-safe; exact — the tuple alone determines the
-      * group). */
-    def rebuild(spark: SparkSession, touched: DataFrame, frame: DataFrame): DataFrame = {
-      import org.apache.spark.sql.catalyst.expressions.{And, EqualNullSafe}
-      import org.apache.spark.sql.catalyst.plans.LeftSemi
-      import org.apache.spark.sql.catalyst.plans.logical.{Join => LJoin, JoinHint}
-      val touchedPlan = touched.queryExecution.analyzed
-      val cond = groupExprs.zip(touchedPlan.output)
-        .map { case (g, t) => EqualNullSafe(g, t): Expression }
-        .reduceLeft(And(_, _))
-      val restricted =
-        if (sourceGate)
-          // window tier: semi directly above the substituted source —
-          // the group expressions reference relation attributes, which
-          // restoreAttrs re-mints on the frame, so the gate row-filters
-          // the window's input to the touched partitions exactly
-          analyzed.transformUp {
-            case r: DataSourceV2Relation if r.output == relation.output =>
-              LJoin(restoreAttrs(relation, frame), touchedPlan, LeftSemi,
-                Some(cond), JoinHint.NONE)
-          }
-        else substitute(analyzed, frame).transformUp {
-          case a: Aggregate if a.groupingExpressions == groupExprs =>
-            a.copy(child = LJoin(a.child, touchedPlan, LeftSemi, Some(cond), JoinHint.NONE))
-        }
-      GraftShims.ofRows(spark, restricted).toDF(declaredNames: _*)
-    }
-
-    def rebuildFull(spark: SparkSession, frame: DataFrame): DataFrame =
-      GraftShims.ofRows(spark, substitute(analyzed, frame))
-        .toDF(declaredNames: _*)
-
-    /** The tick's source frame, file-pruned through the
-      * inverse-bounds registry when possible (r16): one tiny agg over
-      * the (persisted) touched tuples collects each key's
-      * min/max/has-null; every group expression
-      * [[InvertibleKeyBounds]] can invert contributes a closed
-      * source-column bound — `date_trunc`/`trunc` time buckets,
-      * cast-to-date, `year`, floor-div and `div` range buckets, and
-      * plain attributes in a mixed key set. Returns:
-      *  - an EMPTY frame when no tuple is touched (read nothing);
-      *  - a [[GraftTable.scanStatsPruned]] scan when ≥1 key inverted
-      *    (supersets only — the rebuild's semi stays the row gate);
-      *  - the full head scan when every key is opaque (`length(s)`-
-      *    class: the r15 behavior, still honest).
-      * NULL touched values OR an `IsNull` arm in: every registry
-      * expression is null-preserving with non-null literal args, so
-      * NULL-keyed groups come exactly from NULL source rows. */
-    def sourceFrameFor(
-        spark: SparkSession, source: GraftTable, head: Long,
-        touched: DataFrame): DataFrame =
-      invertedTouchedFilters(touched, groupExprs.zip(keyNames)) match {
-        case Left(()) => GraftTable.emptyDf(spark, source.metadata.currentSchema)
-        case Right(Nil) => source.scan(spark, source.AtSnapshot(head))
-        case Right(fs) => source.scanStatsPruned(spark, fs, source.AtSnapshot(head))
-      }
-  }
-
-  /** Shared inverse-bounds derivation ([[RebuildExprShape]] and the
-    * join-expr tier): one tiny agg over the touched tuples collects
+  /** Inverse-bounds derivation of every rebuild scan restriction: one
+    * tiny agg over the touched tuples collects
     * each key's min/max/has-null, and every `(groupExpr, keyName)`
     * pair [[InvertibleKeyBounds]] can invert contributes a filter on
     * its source column.
@@ -1996,107 +1196,182 @@ object GraftMaterializedViews {
     })
   }
 
-  /** Analyzed plan → [[RebuildExprShape]], or None. Checked LAST among
-    * the incremental shapes (attribute-keyed tiers file-prune on the
-    * stored key columns directly; this tier prunes through the
-    * inverse-bounds registry when the bucketing inverts). */
+  /** The single-table rebuild shape: `[Filter | Project]*` over ONE
+    * aggregate (or SELECT DISTINCT) over `[Filter | pass-through
+    * Project]*` over one graft table, `GROUP BY <deterministic
+    * expressions>` each exposed (possibly aliased) in the output — or
+    * the per-key WINDOW spelling ([[rebuildWindowExprShapeOf]]). Every
+    * key references source attributes only, so a source row's key
+    * tuple IS its group's (or window partition's) tuple: the tick
+    * restricts the SOURCE rows to the touched tuples (null-safe semi —
+    * exact, every touched group recomputes from its complete row set,
+    * runner-up resurrection included) and re-runs the plan. The scan
+    * file-prunes through [[InvertibleKeyBounds]] wherever the keys
+    * invert — plain attributes always; `date_trunc`/`trunc` time
+    * buckets, cast-to-date, `year`, floor-div and `div` range buckets —
+    * and only a fully opaque key set (`length(s)`-class) pays the full
+    * scan, still with churn-sized aggregate state and write. */
+  private[engine] final case class RebuildExprShape(
+      catalogName: String,
+      relation: DataSourceV2Relation,
+      analyzed: LogicalPlan,
+      aggChild: LogicalPlan,
+      groupExprs: Seq[Expression],
+      keyNames: Seq[String],
+      keyOutIdx: Seq[Int],
+      declaredNames: Seq[String]) extends RecomputeOnTouch {
+
+    def rels: Seq[DataSourceV2Relation] = Seq(relation)
+    def keys: Seq[(Expression, String)] = groupExprs.zip(keyNames)
+    def withOutNames(declared: Seq[String]): RebuildExprShape =
+      copy(declaredNames = declared)
+    def sourceTable(spark: SparkSession): GraftTable = table(spark, idents.head)
+
+    /** Touched key tuples of a delta: the key expressions over its
+      * plain rows through the aggregate's input chain (its filters
+      * apply — a superset is safe). */
+    def touchedOf(spark: SparkSession, deltaRows: DataFrame): DataFrame =
+      GraftShims.ofRows(spark, substitute(aggChild, Seq(deltaRows)))
+        .select(keys.map { case (e, n) => GraftShims.column(e).as(n) }: _*)
+
+    def touchedKeys(t: Tick): DataFrame = touchedOf(t.spark, t.deltas(0))
+
+    /** The tick's source scan at `head`, file-pruned by the touched
+      * tuples' inverted bounds:
+      *  - an EMPTY frame when no tuple is touched (read nothing);
+      *  - a [[GraftTable.scanStatsPruned]] scan when ≥1 key inverted
+      *    (supersets only — the rebuild's semi stays the row gate);
+      *  - the full head scan when every key is opaque.
+      * NULL touched values OR an `IsNull` arm in: every registry
+      * expression is null-preserving with non-null literal args, so
+      * NULL-keyed groups come exactly from NULL source rows. */
+    def sourceFrameFor(
+        spark: SparkSession, source: GraftTable, head: Long,
+        touched: DataFrame): DataFrame =
+      invertedTouchedFilters(touched, keys) match {
+        case Left(()) => GraftTable.emptyDf(spark, source.metadata.currentSchema)
+        case Right(Nil) => source.scan(spark, source.AtSnapshot(head))
+        case Right(fs) => source.scanStatsPruned(spark, fs, source.AtSnapshot(head))
+      }
+
+    /** Re-execute the defining plan over `frame`'s rows whose key
+      * tuple is in `touched`. */
+    def rebuild(spark: SparkSession, touched: DataFrame, frame: DataFrame): DataFrame =
+      rebuildFull(spark, Seq(keySemi(frame, touched, keys)))
+
+    def rebuildTouched(t: Tick, touched: DataFrame): DataFrame =
+      rebuild(t.spark, touched, sourceFrameFor(t.spark, t.tables(0), t.heads(0), touched))
+  }
+
+  /** Analyzed plan → the aggregate spelling of [[RebuildExprShape]],
+    * or None. Checked AFTER the arithmetic fold shapes (cheaper ticks
+    * win): HAVING, expressions over aggregates, multiple value
+    * columns, DISTINCT projections and expression keys all land here. */
   private[engine] def rebuildExprShapeOf(
       spark: SparkSession, analyzed: LogicalPlan): Option[RebuildExprShape] = {
     val agg = peelAggNode(strip(analyzed)).getOrElse(return None)
-    val groupExprs = agg.groupingExpressions
-    if (groupExprs.isEmpty) return None // keyless: the fold tier's branch
-    if (!groupExprs.forall(_.deterministic)) return None
-    val rel = belowChain(agg.child) match {
-      case r: DataSourceV2Relation if r.identifier.isDefined &&
-          r.catalog.exists(_.isInstanceOf[GraftSparkCatalog]) => r
-      case _ => return None
+    // keyless: the fold tier's branch (or full) — no key to replace rows by
+    if (agg.groupExprs.isEmpty || !agg.groupExprs.forall(_.deterministic)) return None
+    val rel = graftRel(belowChain(agg.child)).getOrElse(return None)
+    if (!agg.groupExprs.forall(_.references.subsetOf(rel.outputSet))) return None
+    val (keyNames, keyOutIdx) = exposedKeys(analyzed, agg).getOrElse(return None)
+    Some(RebuildExprShape(rel.catalog.get.name(), rel, analyzed, agg.child,
+      agg.groupExprs, keyNames, keyOutIdx, analyzed.output.map(_.name)))
+  }
+
+  /** Analyzed plan → the WINDOW spelling of [[RebuildExprShape]], or
+    * None: `[Project|Filter]*` over ONE Window node — every window
+    * expression partitioned by the SAME deterministic keys — over
+    * `[Filter|Project]*` over one graft relation. This is the top-k /
+    * latest-row-per-key operational MV spelled the way people actually
+    * spell it:
+    * {{{
+    *   SELECT k, v, payload FROM (
+    *     SELECT *, row_number() OVER (PARTITION BY k ORDER BY v DESC) rn
+    *     FROM t) WHERE rn <= 3
+    * }}}
+    * (also rank/dense_rank filters, per-key lag/lead views, and the
+    * day-bucketed leaderboard `PARTITION BY date_trunc('day', ts)`). A
+    * window partitioned by K computes each K-group from that group's
+    * rows alone, so re-running the plan over the touched partitions'
+    * COMPLETE head-pinned row sets yields exactly those keys' true
+    * rows. The analyzer extracts expression keys into a computing
+    * Project below the Window (`_w0`); the below-chain aliases are
+    * inlined to recover each key as a RELATION-LEVEL expression, and
+    * touched tuples evaluate over the delta's plain rows (below-chain
+    * filters skipped — a superset is safe). Boundaries (→ full,
+    * honest): multiple or nested Window nodes or mixed partition specs
+    * (a window over a COARSER key could read rows outside the touched
+    * partitions), an empty partition spec (global window), a key not
+    * exposed in the output, a key whose below-chain resolution fails. */
+  private[engine] def rebuildWindowExprShapeOf(
+      spark: SparkSession, analyzed: LogicalPlan): Option[RebuildExprShape] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+    def peelToWindow(p: LogicalPlan): Option[LWindow] = strip(p) match {
+      case w: LWindow => Some(w)
+      case f: Filter if f.condition.deterministic => peelToWindow(f.child)
+      case pr: Project if pr.projectList.forall(_.deterministic) =>
+        peelToWindow(pr.child)
+      case _ => None
     }
+    val w = peelToWindow(analyzed).getOrElse(return None)
+    if (w.child.exists(_.isInstanceOf[LWindow])) return None
+    if (!w.windowExpressions.forall(_.deterministic)) return None
+    if (!w.orderSpec.forall(_.deterministic)) return None
+    if (w.partitionSpec.isEmpty) return None // global window: full
+    if (!w.partitionSpec.forall(_.deterministic)) return None
+    val (childOuts, rel0) = relationLevelOutputs(w.child).getOrElse(return None)
+    val rel = graftRel(rel0).getOrElse(return None)
+    val byId = w.child.output.map(_.exprId).zip(childOuts).toMap
+    val groupExprs = w.partitionSpec.map(e =>
+      inlineToRelation(e, byId).getOrElse(return None))
     if (!groupExprs.forall(_.references.subsetOf(rel.outputSet))) return None
-    // locate each group expression's exposed aggregate output
-    val aggOut = groupExprs.map { g =>
-      val j = agg.aggregateExpressions.indexWhere {
-        case a: AttributeReference => g.semanticEquals(a)
-        case Alias(e, _) => e.semanticEquals(g)
-        case _ => false
-      }
-      if (j < 0) return None // group expression not exposed
-      (agg.aggregateExpressions(j).toAttribute.exprId,
-        agg.aggregateExpressions(j).name)
-    }
-    val keyNames = aggOut.map(_._2)
-    if (keyNames.distinct.size != keyNames.size) return None
-    // trace each exposed aggregate output to a final output position
-    val traced = originsToAgg(strip(analyzed))
-    val keyOutIdx = aggOut.map { case (id, _) =>
-      val i = traced.indexWhere(_.contains(id))
+    // exposure: each key tuple component must be addressable in the
+    // final output (replaceKeys deletes/reinserts by those columns)
+    val (outExprs, _) = relationLevelOutputs(analyzed).getOrElse(return None)
+    val keyOutIdx = groupExprs.map { g =>
+      val i = outExprs.indexWhere(_.exists(_.semanticEquals(g)))
       if (i < 0) return None
       i
     }
-    val ident = rel.identifier.get
-    Some(RebuildExprShape(
-      rel.catalog.get.name(),
-      TableIdent(ident.namespace().toSeq, ident.name()),
-      rel, analyzed, agg.child,
-      groupExprs, keyNames, keyOutIdx,
-      analyzed.output.map(_.name)))
+    if (keyOutIdx.distinct.size != keyOutIdx.size) return None
+    val declared = analyzed.output.map(_.name)
+    val keyNames = keyOutIdx.map(declared)
+    if (keyNames.distinct.size != keyNames.size) return None
+    Some(RebuildExprShape(rel.catalog.get.name(), rel, analyzed, rel,
+      groupExprs, keyNames, keyOutIdx, declared))
   }
 
-  /** One refresh tick for [[RebuildExprShape]] — the expression-keyed
-    * twin of [[refreshRebuild]]: churn-sized aggregate state and
-    * commit, and (r16) a source scan file-pruned through the
-    * inverse-bounds registry whenever the bucketing expressions
-    * invert ([[RebuildExprShape.sourceFrameFor]]); only fully opaque
-    * key sets still pay the full scan. */
-  private def refreshRebuildExpr(
-      spark: SparkSession, mv: GraftTable, re: RebuildExprShape): RefreshMode = {
-    val meta = mv.metadata
-    val source = re.sourceTable(spark)
-    val srcHead = source.metadata.currentSnapshotId.getOrElse(return NoOp)
-    val key = ChangelogApply.ckptKey(re.sourceName)
-    meta.properties.get(key).flatMap(_.toLongOption) match {
-      case Some(c) if c == srcHead => NoOp
-      case Some(c) =>
-        val plainChanges = source.changelogScan(spark, c, Some(srcHead))
-          .select(re.relation.output.map(a => col(a.name)): _*)
-        val touched = re.touchedOf(spark, plainChanges).distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          mv.replaceKeys(spark, re.keyOutNames,
-            re.touchedOut(touched),
-            re.rebuild(spark, touched,
-              re.sourceFrameFor(spark, source, srcHead, touched)),
-            meta.currentSnapshotId,
-            extraProperties = Map(key -> srcHead.toString,
-              RefreshModeProp -> "incremental-rebuild"))
-          Incremental
-        } finally touched.unpersist(blocking = false)
-      case None =>
-        mv.overwriteAll(
-          re.rebuildFull(spark, source.scan(spark, source.AtSnapshot(srcHead))),
-          meta.currentSnapshotId,
-          extraProperties = Map(key -> srcHead.toString,
-            RefreshModeProp -> "incremental-rebuild"))
-        Full
-    }
-  }
-
-  /** The expression-keyed rebuild tier over a two-table INNER join
-    * (r16): `GROUP BY <deterministic expressions>` where every group
-    * expression sits entirely on ONE side and is exposed in the
-    * output — the time-bucketed join MV (`GROUP BY
-    * date_trunc('day', o.ts), c.region`), previously a full recompute.
-    * The tick is recompute-on-touch on the expression TUPLE: touched
-    * tuples derive from the inner pair cover (Δ⋈head, head⋈Δ, Δ⋈Δ —
-    * heads pruned by the deltas' equi-join envelopes, exactly the
-    * attribute tier's derivation), the rebuild's side scans
-    * file-prune through the inverse-bounds registry
-    * ([[InvertibleKeyBounds]]) on each side's own keys, and the
-    * commit replaces exactly the touched tuples. INNER only:
-    * null-extension semantics stay with the attribute-keyed shape. */
-  private[engine] final case class RebuildJoinExprShape(
+  /** The rebuild shape over a TWO-TABLE join: `[Filter|Project]*` over
+    * one aggregate over `[Filter|Project]*` over `a JOIN b` with ANY
+    * deterministic condition (the rebuild re-executes the plan, so
+    * nothing restricts it to single-attribute equi-joins the way the
+    * arithmetic fold is). INNER and the three OUTER join types qualify;
+    * each group key lives on ONE side and is exposed in the output.
+    * Expression keys (the time-bucketed join MV, `GROUP BY
+    * date_trunc('day', o.ts), c.region`) are INNER-only: the outer
+    * null-extension cover reasons about keys taken verbatim from a
+    * side's columns.
+    *
+    * Touched keys come from the cover terms the join type requires.
+    * PAIR terms (join innerized) catch every joined pair that appeared
+    * or disappeared: ΔA⋈B@head, A@head⋈ΔB, and ΔA⋈ΔB when both sides
+    * moved — the bilinear cover, each term evaluated by substituting
+    * the plan BELOW the aggregate (so the defining WHERE and join
+    * condition apply). An OUTER join additionally changes
+    * NULL-EXTENDED rows, whose groups the pair terms cannot see; for
+    * each PRESERVED side S the tick adds
+    *  - nullExt(ΔS): a changed S row's null-extension may have
+    *    appeared or disappeared with the row itself, and
+    *  - nullExt(S@head ⋉cond Δother): an S row whose match-set a
+    *    changed other-side row entered or left may have flipped
+    *    between matched and null-extended.
+    * Both are delta-bounded; both are supersets of the truth. The
+    * rebuild re-executes the FULL plan at the two pinned heads with
+    * each side's scan restricted to its touched keys where the join
+    * type allows, and the null-safe semi above the aggregate. */
+  private[engine] final case class RebuildJoinShape(
       catalogName: String,
-      leftIdent: TableIdent,
-      rightIdent: TableIdent,
       leftRel: DataSourceV2Relation,
       rightRel: DataSourceV2Relation,
       analyzed: LogicalPlan,
@@ -2104,223 +1379,187 @@ object GraftMaterializedViews {
       groupExprs: Seq[Expression],
       keyNames: Seq[String],
       keyOutIdx: Seq[Int],
-      declaredNames: Seq[String]) {
+      declaredNames: Seq[String],
+      joinType: org.apache.spark.sql.catalyst.plans.JoinType,
+      leftChild: LogicalPlan,
+      rightChild: LogicalPlan,
+      joinCond: Option[Expression]) extends RecomputeOnTouch {
 
-    def leftName: String =
-      s"$catalogName.${leftIdent.namespace.mkString(".")}.${leftIdent.name}"
-    def rightName: String =
-      s"$catalogName.${rightIdent.namespace.mkString(".")}.${rightIdent.name}"
-    def keyOutNames: Seq[String] = keyOutIdx.map(declaredNames)
-    def withOutNames(declared: Seq[String]): RebuildJoinExprShape =
+    def rels: Seq[DataSourceV2Relation] = Seq(leftRel, rightRel)
+    def keys: Seq[(Expression, String)] = groupExprs.zip(keyNames)
+    def leftIdent: TableIdent = idents(0)
+    def rightIdent: TableIdent = idents(1)
+    def withOutNames(declared: Seq[String]): RebuildJoinShape =
       copy(declaredNames = declared)
 
-    def table(spark: SparkSession, ti: TableIdent): GraftTable = {
-      val plugin = GraftShims.catalogPlugin(spark, Some(catalogName))
-      plugin.asInstanceOf[GraftSparkCatalog].engineTable(ti)
+    /** Does the join preserve unmatched rows of this side (LEFT
+      * preserves its left, FULL both)? Preserved-side rows can appear
+      * NULL-EXTENDED in the output — the semantics the outer-join
+      * cover terms and the restriction policy both hinge on. */
+    def preservesLeft: Boolean = joinType == LeftOuter || joinType == FullOuter
+    def preservesRight: Boolean = joinType == RightOuter || joinType == FullOuter
+
+    /** Group keys of one PAIR cover term: the plan below the aggregate
+      * with the sides substituted and the join INNERIZED, projected to
+      * the group keys. Innerizing matters for the outer grammar: a
+      * delta-vs-head term evaluated with the plan's own OUTER join
+      * would null-extend every unmatched head row and blow the touched
+      * set up to the whole base — pairs come from the inner core, and
+      * null-extension changes are covered by [[nullExtKeys]] terms. */
+    def pairKeysOf(spark: SparkSession, aFrame: DataFrame, bFrame: DataFrame): DataFrame = {
+      val innerized = aggChild.transformUp {
+        case j: Join if j.joinType != Inner => j.copy(joinType = Inner)
+      }
+      GraftShims.ofRows(spark, substitute(innerized, Seq(aFrame, bFrame)))
+        .select(keys.map { case (e, n) => GraftShims.column(e).as(n) }: _*)
     }
 
-    def touchedOut(touched: DataFrame): DataFrame =
-      touched.select(keyNames.zip(keyOutNames)
-        .map { case (s, o) => col(s).as(o) }: _*)
+    /** The NULL-EXTENSION key of a preserved side's rows: that side's
+      * group-key columns taken verbatim, every OTHER side's group key
+      * as a typed NULL — the group a row lands in when it has no join
+      * match. Cover terms feed this with (a) the side's delta rows
+      * (their null-extension may have appeared/disappeared) and (b)
+      * the side's head rows whose match-set changed ([[matchRows]]). */
+    def nullExtKeys(sideOut: AttributeSet, rows: DataFrame): DataFrame =
+      rows.select(keys.map {
+        case (a: AttributeReference, n) if sideOut.contains(a) => col(a.name).as(n)
+        case (g, n) => lit(null).cast(g.dataType).as(n)
+      }: _*)
 
-    private def substitute(
-        plan: LogicalPlan, aFrame: DataFrame, bFrame: DataFrame): LogicalPlan =
-      plan.transformUp {
-        case r: DataSourceV2Relation if r.output == leftRel.output =>
-          restoreAttrs(leftRel, aFrame)
-        case r: DataSourceV2Relation if r.output == rightRel.output =>
-          restoreAttrs(rightRel, bFrame)
-      }
-
-    /** Touched group-expression tuples of one cover term: the
-      * below-aggregate join at the substituted frames, projected to
-      * the group expressions. */
-    def keysOf(spark: SparkSession, aFrame: DataFrame, bFrame: DataFrame): DataFrame =
-      GraftShims.ofRows(spark, substitute(aggChild, aFrame, bFrame))
-        .select(groupExprs.zip(keyNames)
-          .map { case (e, n) => GraftShims.column(e).as(n) }: _*)
-
-    /** One side's head scan for the REBUILD, file-pruned by the
-      * touched tuples of the keys living on THIS side (exact for the
-      * inner join: removing a row only removes pairs, and the
-      * above-aggregate semi stays the row-level gate). A side carrying
-      * no invertible key keeps the full scan. */
-    def sideFrameFor(
-        spark: SparkSession, t: GraftTable, head: Long,
-        sideOut: org.apache.spark.sql.catalyst.expressions.AttributeSet,
-        touched: DataFrame): DataFrame = {
-      val sideKeys = groupExprs.zip(keyNames).filter { case (e, _) =>
-        e.references.nonEmpty && e.references.subsetOf(sideOut)
-      }
-      if (sideKeys.isEmpty) return t.scan(spark, t.AtSnapshot(head))
-      invertedTouchedFilters(
-        touched.select(sideKeys.map(_._2).map(col): _*).distinct(), sideKeys) match {
-        case Left(()) => GraftTable.emptyDf(spark, t.metadata.currentSchema)
-        case Right(Nil) => t.scan(spark, t.AtSnapshot(head))
-        case Right(fs) => t.scanStatsPruned(spark, fs, t.AtSnapshot(head))
-      }
+    /** Rows of the PRESERVED side (its join-child plan at `headFrame`)
+      * that match the OTHER side's delta under the join condition — a
+      * LeftSemi on the defining ON clause, so any row whose match-set
+      * a delta row could have entered or left is found, delta-bounded. */
+    def matchRows(
+        spark: SparkSession, preservedIsLeft: Boolean,
+        headFrame: DataFrame, deltaFrame: DataFrame): DataFrame = {
+      val (keep, probe) =
+        if (preservedIsLeft)
+          (substitute(leftChild, Seq(headFrame, headFrame)),
+            substitute(rightChild, Seq(deltaFrame, deltaFrame)))
+        else
+          (substitute(rightChild, Seq(headFrame, headFrame)),
+            substitute(leftChild, Seq(deltaFrame, deltaFrame)))
+      GraftShims.ofRows(spark, Join(keep, probe, LeftSemi, joinCond, JoinHint.NONE))
     }
 
-    /** Re-execute the defining plan at the substituted frames with the
-      * aggregate's input restricted to touched expression tuples
-      * (null-safe semi — exact: the tuple alone determines the
-      * group). */
+    /** The cover terms above, over the tick's persisted deltas. The
+      * DERIVATION's head-side scans are bounded by the deltas'
+      * equi-join key min/max (r16) — a head row outside every linked
+      * delta's range cannot satisfy the equality against any delta
+      * row, so pair and match terms stay exact under the restriction;
+      * the null-extension terms read deltas only. */
+    def touchedKeys(t: Tick): DataFrame = {
+      val (dA, dB) = (t.deltas.get(0), t.deltas.get(1))
+      val (aStats, bStats) = (dA.map(_ => t.stats(0)), dB.map(_ => t.stats(1)))
+      val aLive = aStats.exists(_.rows > 0L)
+      val bLive = bStats.exists(_.rows > 0L)
+      val aSat = aStats.exists(equiSat(t.eq, _, 0))
+      val bSat = bStats.exists(equiSat(t.eq, _, 1))
+      def prunedHead(i: Int, ds: DeltaEquiStats): DataFrame =
+        prunedHeadScan(t.spark, t.tables(i), t.heads(i), equiBoundsFor(t.eq, i, ds))
+      val terms = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      if (aLive && aSat) {
+        terms += pairKeysOf(t.spark, dA.get, prunedHead(1, aStats.get))
+        if (bLive && bSat) terms += pairKeysOf(t.spark, dA.get, dB.get)
+      }
+      if (bLive && bSat) terms += pairKeysOf(t.spark, prunedHead(0, bStats.get), dB.get)
+      if (preservesLeft) {
+        if (aLive) terms += nullExtKeys(leftRel.outputSet, dA.get)
+        if (bLive && bSat) terms += nullExtKeys(leftRel.outputSet,
+          matchRows(t.spark, preservedIsLeft = true, prunedHead(0, bStats.get), dB.get))
+      }
+      if (preservesRight) {
+        if (bLive) terms += nullExtKeys(rightRel.outputSet, dB.get)
+        if (aLive && aSat) terms += nullExtKeys(rightRel.outputSet,
+          matchRows(t.spark, preservedIsLeft = false, prunedHead(1, aStats.get), dA.get))
+      }
+      if (terms.isEmpty) pairKeysOf(t.spark, t.headFrames(0), t.headFrames(1)).limit(0)
+      else terms.reduceLeft(_ unionByName _)
+    }
+
+    /** Re-execute the full defining plan at the substituted sides,
+      * with the touched-key restriction applied at BOTH levels:
+      * per-side scan restriction ([[restrictFrame]] — bounds pushed to
+      * the scans, so a tick's join is churn-sized, never
+      * full-join-sized) and the null-safe semi above the aggregate. */
     def rebuild(
         spark: SparkSession, touched: DataFrame,
-        aFrame: DataFrame, bFrame: DataFrame): DataFrame = {
-      import org.apache.spark.sql.catalyst.expressions.{And, EqualNullSafe}
-      import org.apache.spark.sql.catalyst.plans.LeftSemi
-      import org.apache.spark.sql.catalyst.plans.logical.{Join => LJoin, JoinHint}
-      val touchedPlan = touched.queryExecution.analyzed
-      val cond = groupExprs.zip(touchedPlan.output)
-        .map { case (g, t) => EqualNullSafe(g, t): Expression }
-        .reduceLeft(And(_, _))
-      val restricted = substitute(analyzed, aFrame, bFrame).transformUp {
-        case a: Aggregate if a.groupingExpressions == groupExprs =>
-          a.copy(child = LJoin(a.child, touchedPlan, LeftSemi, Some(cond), JoinHint.NONE))
-      }
-      GraftShims.ofRows(spark, restricted).toDF(declaredNames: _*)
-    }
-
-    /** Unrestricted re-execution (cold start / full-at-heads). */
-    def rebuildFull(
-        spark: SparkSession, aFrame: DataFrame, bFrame: DataFrame): DataFrame =
-      GraftShims.ofRows(spark, substitute(analyzed, aFrame, bFrame))
-        .toDF(declaredNames: _*)
-  }
-
-  /** Analyzed plan → [[RebuildJoinExprShape]], or None. Checked LAST
-    * (after every attribute-keyed tier and the single-table expr
-    * tier declined). */
-  private[engine] def rebuildJoinExprShapeOf(
-      spark: SparkSession, analyzed: LogicalPlan): Option[RebuildJoinExprShape] = {
-    val agg = peelAggNode(strip(analyzed)).getOrElse(return None)
-    val groupExprs = agg.groupingExpressions
-    if (groupExprs.isEmpty) return None
-    if (!groupExprs.forall(_.deterministic)) return None
-    val (lr, rr) = belowChain(agg.child) match {
-      case Join(l0, r0, Inner, cond, _) if cond.forall(_.deterministic) =>
-        (belowChain(l0), belowChain(r0)) match {
-          case (lr: DataSourceV2Relation, rr: DataSourceV2Relation)
-              if lr.identifier.isDefined && rr.identifier.isDefined &&
-                lr.catalog.exists(_.isInstanceOf[GraftSparkCatalog]) &&
-                rr.catalog.exists(_.isInstanceOf[GraftSparkCatalog]) &&
-                lr.catalog.get.name() == rr.catalog.get.name() => (lr, rr)
-          case _ => return None
+        aFrame: DataFrame, bFrame: DataFrame,
+        aPruned: Option[Seq[org.apache.spark.sql.sources.Filter] => DataFrame] = None,
+        bPruned: Option[Seq[org.apache.spark.sql.sources.Filter] => DataFrame] = None)
+        : DataFrame = {
+      // RESTRICTION POLICY by join type: restricting a side is exact
+      // only when removing its rows cannot FABRICATE output rows. For
+      // INNER joins removing any row only removes pairs — both sides
+      // restrict. For an OUTER join, removing rows of a NON-preserved
+      // side can turn a matched preserved row into a spurious
+      // null-extended one, which could land in a legitimately-touched
+      // (…, NULL) group and corrupt its rebuild — so only sides whose
+      // unmatched rows the join does NOT preserve against may stay
+      // unrestricted: LEFT restricts its left, RIGHT its right, FULL
+      // neither (the above-aggregate semi remains the exactness gate
+      // and the only restriction). A side is NARROWED only when the
+      // policy allows AND it computes a group key.
+      val aNarrowed = !preservesRight && keysOn(keys, leftRel.outputSet).nonEmpty
+      val bNarrowed = !preservesLeft && keysOn(keys, rightRel.outputSet).nonEmpty
+      val aR = if (aNarrowed) restrictFrame(keys, aFrame, touched, leftRel.outputSet, aPruned)
+        else aFrame
+      val bR = if (bNarrowed) restrictFrame(keys, bFrame, touched, rightRel.outputSet, bPruned)
+        else bFrame
+      // r16 ENVELOPE: an un-narrowed, NON-PRESERVED side only matters
+      // where it matches the narrowed companion — bound it by the
+      // companion's direct equi-join-column stats (exact: dropping
+      // non-matching rows of a non-preserved side cannot add or remove
+      // output rows over the companion). Kills the rebuild's last
+      // full dim scan in LEFT/RIGHT-join ticks and keyless-side inner
+      // ticks; FULL OUTER keeps both sides whole.
+      val eq = treeEquiPairs(aggChild, rels)
+      def enveloped(frame: DataFrame, side: Int, companion: DataFrame,
+          pruned: Option[Seq[org.apache.spark.sql.sources.Filter] => DataFrame]) =
+        companionBounds(eq, side, 1 - side, companion) match {
+          case Left(()) => frame.limit(0)
+          case Right(bs) => applyBounds(frame, pruned, bs)
         }
-      case _ => return None
+      val bFinal = if (!bNarrowed && !preservesRight && aNarrowed) enveloped(bR, 1, aR, bPruned)
+        else bR
+      val aFinal = if (!aNarrowed && !preservesLeft && bNarrowed) enveloped(aR, 0, bR, aPruned)
+        else aR
+      rebuildAt(spark, touched, Seq(aFinal, bFinal))
     }
-    // each group expression must sit entirely on one side (a
-    // cross-side expression can't be derived per-side; full)
-    if (!groupExprs.forall(g =>
-      g.references.subsetOf(lr.outputSet) || g.references.subsetOf(rr.outputSet)))
-      return None
-    val aggOut = groupExprs.map { g =>
-      val j = agg.aggregateExpressions.indexWhere {
-        case a: AttributeReference => g.semanticEquals(a)
-        case Alias(e, _) => e.semanticEquals(g)
-        case _ => false
-      }
-      if (j < 0) return None // group expression not exposed
-      (agg.aggregateExpressions(j).toAttribute.exprId,
-        agg.aggregateExpressions(j).name)
-    }
-    val keyNames = aggOut.map(_._2)
-    if (keyNames.distinct.size != keyNames.size) return None
-    val traced = originsToAgg(strip(analyzed))
-    val keyOutIdx = aggOut.map { case (id, _) =>
-      val i = traced.indexWhere(_.contains(id))
-      if (i < 0) return None
-      i
-    }
-    val li = lr.identifier.get
-    val ri = rr.identifier.get
-    Some(RebuildJoinExprShape(
-      lr.catalog.get.name(),
-      TableIdent(li.namespace().toSeq, li.name()),
-      TableIdent(ri.namespace().toSeq, ri.name()),
-      lr, rr, analyzed, agg.child,
-      groupExprs, keyNames, keyOutIdx,
-      analyzed.output.map(_.name)))
+
+    def rebuildTouched(t: Tick, touched: DataFrame): DataFrame =
+      rebuild(t.spark, touched, t.headFrames(0), t.headFrames(1),
+        t.prunedHeads(0), t.prunedHeads(1))
   }
 
-  /** One refresh tick for [[RebuildJoinExprShape]] — the expression-
-    * keyed twin of [[refreshRebuildJoin]]'s INNER path: NoOp when both
-    * checkpoints match their heads, pair-cover touched derivation with
-    * equi-pruned head scans, inverse-bounds-pruned rebuild scans, one
-    * churn-sized keyed commit advancing both checkpoints. */
-  private def refreshRebuildJoinExpr(
-      spark: SparkSession, mv: GraftTable, rx: RebuildJoinExprShape): RefreshMode = {
-    val meta = mv.metadata
-    val lt = rx.table(spark, rx.leftIdent)
-    val rt = rx.table(spark, rx.rightIdent)
-    val lHead = lt.metadata.currentSnapshotId
-    val rHead = rt.metadata.currentSnapshotId
-    val kL = ChangelogApply.ckptKey(rx.leftName)
-    val kR = ChangelogApply.ckptKey(rx.rightName)
-    def headMark(h: Option[Long]): String = h.map(_.toString).getOrElse("none")
-    val ckpts = Map(
-      kL -> headMark(lHead), kR -> headMark(rHead),
-      RefreshModeProp -> "incremental-rebuild")
-    if (meta.properties.get(kL).contains(headMark(lHead)) &&
-        meta.properties.get(kR).contains(headMark(rHead))) return NoOp
-    if (lHead.isEmpty && rHead.isEmpty) return NoOp // inner of two empties
-
-    def frameAt(t: GraftTable, h: Option[Long]): DataFrame =
-      h.map(id => t.scan(spark, t.AtSnapshot(id))).getOrElse(t.scan(spark))
-    def fullAtHeads(): RefreshMode = {
-      mv.overwriteAll(
-        rx.rebuildFull(spark, frameAt(lt, lHead), frameAt(rt, rHead)),
-        meta.currentSnapshotId, extraProperties = ckpts)
-      Full
-    }
-
-    val ckL = meta.properties.get(kL).flatMap(_.toLongOption)
-    val ckR = meta.properties.get(kR).flatMap(_.toLongOption)
-    (ckL, ckR, lHead, rHead) match {
-      case (Some(cl), Some(cr), Some(lh), Some(rh)) =>
-        def plainRows(t: GraftTable, from: Long, to: Long, rel: DataSourceV2Relation) =
-          t.changelogScan(spark, from, Some(to))
-            .select(rel.output.map(a => col(a.name)): _*)
-        val aHead = lt.scan(spark, lt.AtSnapshot(lh))
-        val bHead = rt.scan(spark, rt.AtSnapshot(rh))
-        val aMoved = cl != lh
-        val bMoved = cr != rh
-        val eq = treeEquiPairs(rx.aggChild, Seq(rx.leftRel, rx.rightRel))
-        val dAF = if (aMoved) Some(plainRows(lt, cl, lh, rx.leftRel)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)) else None
-        val dBF = if (bMoved) Some(plainRows(rt, cr, rh, rx.rightRel)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)) else None
-        try {
-          val aStats = dAF.map(deltaEquiStats(_, equiColsOf(eq, 0)))
-          val bStats = dBF.map(deltaEquiStats(_, equiColsOf(eq, 1)))
-          val aLive = aMoved && aStats.exists(_.rows > 0L)
-          val bLive = bMoved && bStats.exists(_.rows > 0L)
-          val aSat = aStats.exists(equiSat(eq, _, 0))
-          val bSat = bStats.exists(equiSat(eq, _, 1))
-          val terms = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-          if (aLive && aSat) {
-            terms += rx.keysOf(spark, dAF.get,
-              prunedHeadScan(spark, rt, rh, equiBoundsFor(eq, 1, aStats.get)))
-            if (bLive && bSat) terms += rx.keysOf(spark, dAF.get, dBF.get)
-          }
-          if (bLive && bSat) terms += rx.keysOf(spark,
-            prunedHeadScan(spark, lt, lh, equiBoundsFor(eq, 0, bStats.get)), dBF.get)
-          val touched =
-            (if (terms.isEmpty) rx.keysOf(spark, aHead, bHead).limit(0)
-            else terms.reduceLeft(_ unionByName _)).distinct()
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            mv.replaceKeys(spark, rx.keyOutNames,
-              rx.touchedOut(touched),
-              rx.rebuild(spark, touched,
-                rx.sideFrameFor(spark, lt, lh, rx.leftRel.outputSet, touched),
-                rx.sideFrameFor(spark, rt, rh, rx.rightRel.outputSet, touched)),
-              meta.currentSnapshotId, extraProperties = ckpts)
-            Incremental
-          } finally touched.unpersist(blocking = false)
-        } finally Seq(dAF, dBF).flatten.foreach(_.unpersist(blocking = false))
-      case _ => fullAtHeads() // a checkpoint missing or a side headless
+  /** Analyzed plan → [[RebuildJoinShape]], or None. Checked after the
+    * join FOLD shape (cheaper ticks win); an outer join with a
+    * non-deterministic ON routes to full like everything else out of
+    * grammar. */
+  private[engine] def rebuildJoinShapeOf(
+      spark: SparkSession, analyzed: LogicalPlan): Option[RebuildJoinShape] = {
+    val agg = peelAggNode(strip(analyzed)).getOrElse(return None)
+    if (agg.groupExprs.isEmpty || !agg.groupExprs.forall(_.deterministic)) return None
+    belowChain(agg.child) match {
+      case Join(l0, r0, jt @ (Inner | LeftOuter | RightOuter | FullOuter), cond, _)
+          if cond.forall(_.deterministic) =>
+        (graftRel(belowChain(l0)), graftRel(belowChain(r0))) match {
+          case (Some(lr), Some(rr)) if lr.catalog.get.name() == rr.catalog.get.name() =>
+            // each key on ONE side: a cross-side expression has no
+            // per-side derivation
+            if (!agg.groupExprs.forall(g =>
+              g.references.subsetOf(lr.outputSet) || g.references.subsetOf(rr.outputSet)))
+              return None
+            if (jt != Inner && !agg.groupExprs.forall(_.isInstanceOf[AttributeReference]))
+              return None
+            val (keyNames, keyOutIdx) = exposedKeys(analyzed, agg).getOrElse(return None)
+            Some(RebuildJoinShape(lr.catalog.get.name(), lr, rr, analyzed, agg.child,
+              agg.groupExprs, keyNames, keyOutIdx, analyzed.output.map(_.name),
+              jt, l0, r0, cond))
+          case _ => None
+        }
+      case _ => None
     }
   }
 
@@ -2338,40 +1577,17 @@ object GraftMaterializedViews {
     * only: null-extension semantics stay with the 2-table shape. */
   private[engine] final case class RebuildMultiJoinShape(
       catalogName: String,
-      idents: Seq[TableIdent],
       rels: Seq[DataSourceV2Relation],
       analyzed: LogicalPlan,
       aggChild: LogicalPlan,
       groupAttrs: Seq[AttributeReference],
       keyOutIdx: Seq[Int],
-      declaredNames: Seq[String]) {
+      declaredNames: Seq[String]) extends RecomputeOnTouch {
 
-    def nameOf(ti: TableIdent): String =
-      s"$catalogName.${ti.namespace.mkString(".")}.${ti.name}"
-    def keySrcNames: Seq[String] = groupAttrs.map(_.name)
-    def keyOutNames: Seq[String] = keyOutIdx.map(declaredNames)
+    def keys: Seq[(Expression, String)] = groupAttrs.map(a => (a, a.name))
     def withOutNames(declared: Seq[String]): RebuildMultiJoinShape =
       copy(declaredNames = declared)
-
-    def table(spark: SparkSession, ti: TableIdent): GraftTable = {
-      val plugin = GraftShims.catalogPlugin(spark, Some(catalogName))
-      plugin.asInstanceOf[GraftSparkCatalog].engineTable(ti)
-    }
-
-    def touchedOut(touched: DataFrame): DataFrame =
-      touched.select(keySrcNames.zip(keyOutNames)
-        .map { case (s, o) => col(s).as(o) }: _*)
-
-    private def substitute(plan: LogicalPlan, frames: Seq[DataFrame]): LogicalPlan = {
-      val byOutput = rels.zip(frames)
-      plan.transformUp {
-        case r: DataSourceV2Relation =>
-          byOutput.find(_._1.output == r.output) match {
-            case Some((rel, frame)) => restoreAttrs(rel, frame)
-            case None => r
-          }
-      }
-    }
+    override def coverable(moved: Int): Boolean = moved <= MaxMovedInstances
 
     /** Group keys of one cover term (all-inner tree: no innerization
       * needed): the below-aggregate plan at the substituted frames,
@@ -2461,23 +1677,15 @@ object GraftMaterializedViews {
         spark: SparkSession, touched: DataFrame, frames: Seq[DataFrame],
         pruned: Seq[Option[Seq[org.apache.spark.sql.sources.Filter] => DataFrame]])
         : DataFrame = {
-      import org.apache.spark.sql.catalyst.expressions.{And, EqualNullSafe}
-      import org.apache.spark.sql.catalyst.plans.LeftSemi
-      import org.apache.spark.sql.catalyst.plans.logical.{Join => LJoin, JoinHint}
-      val touchedPlan = touched.queryExecution.analyzed
-      val cond = groupAttrs.zip(touchedPlan.output)
-        .map { case (g, t) => EqualNullSafe(g, t): Expression }
-        .reduceLeft(And(_, _))
       val hasKeys = rels.map(r => groupAttrs.exists(r.outputSet.contains))
       val restrictedFrames = frames.zipWithIndex.map { case (f, i) =>
-        restrictFrame(groupAttrs, f, touched, rels(i).outputSet,
-          pruned.lift(i).flatten)
+        restrictFrame(keys, f, touched, rels(i).outputSet, pruned.lift(i).flatten)
       }
       // r16 ENVELOPE: a keyless side of the all-inner tree only
       // matters where it matches some key-narrowed companion — AND the
       // bounds from every directly-equated narrowed side (exact for
       // inner joins; see [[companionBounds]]).
-      val eq = GraftMaterializedViews.treeEquiPairs(aggChild, rels)
+      val eq = treeEquiPairs(aggChild, rels)
       val finalFrames = restrictedFrames.zipWithIndex.map { case (f, i) =>
         if (hasKeys(i)) f
         else {
@@ -2485,30 +1693,37 @@ object GraftMaterializedViews {
           narrowed.foldLeft[Either[Unit, Seq[(String, Any, Any)]]](Right(Nil)) {
             case (Left(()), _) => Left(())
             case (Right(acc), j) =>
-              GraftMaterializedViews.companionBounds(eq, i, j, restrictedFrames(j))
-                .map(acc ++ _)
+              companionBounds(eq, i, j, restrictedFrames(j)).map(acc ++ _)
           } match {
             case Left(()) => f.limit(0)
-            case Right(bs) =>
-              GraftMaterializedViews.applyBounds(f, pruned.lift(i).flatten, bs)
+            case Right(bs) => applyBounds(f, pruned.lift(i).flatten, bs)
           }
         }
       }
-      val swapped = substitute(analyzed, finalFrames)
-      val restricted = swapped.transformUp {
-        case a: Aggregate if a.groupingExpressions == (groupAttrs: Seq[Expression]) =>
-          a.copy(child = LJoin(a.child, touchedPlan, LeftSemi, Some(cond), JoinHint.NONE))
-        case d: org.apache.spark.sql.catalyst.plans.logical.Distinct
-            if strip(d.child).output == groupAttrs =>
-          d.copy(child = LJoin(d.child, touchedPlan, LeftSemi, Some(cond), JoinHint.NONE))
-      }
-      GraftShims.ofRows(spark, restricted).toDF(declaredNames: _*)
+      rebuildAt(spark, touched, finalFrames)
     }
 
-    /** Unrestricted re-execution (cold start / full-at-heads). */
-    def rebuildFull(spark: SparkSession, frames: Seq[DataFrame]): DataFrame =
-      GraftShims.ofRows(spark, substitute(analyzed, frames))
-        .toDF(declaredNames: _*)
+    /** The subset cover (r16: each moved delta persisted ONCE — it
+      * feeds 2^(m−1) cover terms plus its envelope aggregation — and
+      * its equi-join-key min/max bound the head scans every term joins
+      * it against, so the derivation's head-side INPUT is churn-local):
+      * every non-empty subset of the moved instances, deltas for the
+      * subset and heads for the rest; provably-empty terms drop. */
+    def touchedKeys(t: Tick): DataFrame = {
+      val movedIdx = t.deltas.keys.toSeq.sorted
+      val subsets = (1 until (1 << movedIdx.size)).map(mask =>
+        movedIdx.zipWithIndex.collect {
+          case (inst, bit) if (mask & (1 << bit)) != 0 => inst
+        }.toSet)
+      val terms = subsets.flatMap(s =>
+        termFrames(t.spark, s, t.deltas, t.stats, t.headFrames, t.prunedHeads, t.eq)
+          .map(frames => keysOf(t.spark, frames)))
+      if (terms.isEmpty) keysOf(t.spark, t.headFrames).limit(0)
+      else terms.reduceLeft(_ unionByName _)
+    }
+
+    def rebuildTouched(t: Tick, touched: DataFrame): DataFrame =
+      rebuild(t.spark, touched, t.headFrames, t.prunedHeads)
   }
 
   /** Equi-key envelope of one delta (r16): row count plus per-column
@@ -2683,22 +1898,16 @@ object GraftMaterializedViews {
     * None. Checked after the two-table rebuild shape. */
   private[engine] def rebuildMultiJoinShapeOf(
       spark: SparkSession, analyzed: LogicalPlan): Option[RebuildMultiJoinShape] = {
-    val (groupExprs, aggChild) = peelToAggregate(strip(analyzed)).getOrElse(return None)
-    val rels = collectInnerRelTree(aggChild).getOrElse(return None)
+    val agg = peelAggNode(strip(analyzed)).getOrElse(return None)
+    val rels = collectInnerRelTree(agg.child).getOrElse(return None)
     if (rels.size < 3) return None
-    if (!rels.forall(r => r.identifier.isDefined &&
-        r.catalog.exists(_.isInstanceOf[GraftSparkCatalog]))) return None
+    if (!rels.forall(graftRel(_).isDefined)) return None
     val catNames = rels.map(_.catalog.get.name()).distinct
     if (catNames.size != 1) return None
-    val (groupAttrs, keyOutIdx) = traceKeys(analyzed, groupExprs,
-      rels.map(_.outputSet).reduce(_ ++ _)).getOrElse(return None)
-    Some(RebuildMultiJoinShape(
-      catNames.head,
-      rels.map(r => TableIdent(
-        r.identifier.get.namespace().toSeq, r.identifier.get.name())),
-      rels, analyzed, aggChild,
-      groupAttrs, keyOutIdx,
-      analyzed.output.map(_.name)))
+    val (groupAttrs, keyOutIdx) =
+      attrKeys(analyzed, agg, rels.map(_.outputSet).reduce(_ ++ _)).getOrElse(return None)
+    Some(RebuildMultiJoinShape(catNames.head, rels, analyzed, agg.child,
+      groupAttrs, keyOutIdx, analyzed.output.map(_.name)))
   }
 
   /** Cover-term explosion guard, stated on the MOVED-INSTANCE count m
@@ -2709,105 +1918,6 @@ object GraftMaterializedViews {
     * 5 bits) — a wrapped guard would pass, leave the subset list
     * empty, and throw on `reduceLeft` instead of falling back. */
   private val MaxMovedInstances = 4
-
-  /** One refresh tick for [[RebuildMultiJoinShape]] — the N-ary twin
-    * of the two-table tick: NoOp when every checkpoint matches its
-    * head, subset-cover touched derivation, per-side-restricted
-    * rebuild, one churn-sized keyed commit advancing ALL checkpoints
-    * atomically. Self-joins share one checkpoint per TABLE; the cover
-    * still ranges over INSTANCES (a tuple changes if any component
-    * row of any instance changed). */
-  private def refreshRebuildMulti(
-      spark: SparkSession, mv: GraftTable, rm: RebuildMultiJoinShape): RefreshMode = {
-    val meta = mv.metadata
-    val names = rm.idents.map(rm.nameOf)
-    val distinctIdents = rm.idents.zip(names).distinctBy(_._2)
-    val tables = distinctIdents.map { case (ti, n) => n -> rm.table(spark, ti) }.toMap
-    val heads = tables.map { case (n, t) => n -> t.metadata.currentSnapshotId }
-    def headMark(h: Option[Long]): String = h.map(_.toString).getOrElse("none")
-    val ckpts = heads.map { case (n, h) =>
-      ChangelogApply.ckptKey(n) -> headMark(h)
-    } ++ Map(RefreshModeProp -> "incremental-rebuild")
-    if (heads.forall { case (n, h) =>
-      meta.properties.get(ChangelogApply.ckptKey(n)).contains(headMark(h))
-    }) return NoOp
-
-    def fullAtHeads(): RefreshMode = {
-      def frameAt(n: String): DataFrame = {
-        val t = tables(n)
-        heads(n).map(id => t.scan(spark, t.AtSnapshot(id))).getOrElse(t.scan(spark))
-      }
-      mv.overwriteAll(
-        rm.rebuildFull(spark, names.map(frameAt)),
-        meta.currentSnapshotId, extraProperties = ckpts)
-      Full
-    }
-
-    val parsed = heads.map { case (n, h) =>
-      n -> (meta.properties.get(ChangelogApply.ckptKey(n)).flatMap(_.toLongOption), h)
-    }
-    if (!parsed.forall { case (_, (c, h)) => c.isDefined && h.isDefined })
-      return fullAtHeads() // a checkpoint missing or a table headless
-    val ck = parsed.map { case (n, (c, h)) => n -> (c.get, h.get) }
-    val movedNames = ck.collect { case (n, (c, h)) if c != h => n }.toSet
-    val movedIdx = names.zipWithIndex.collect {
-      case (n, i) if movedNames(n) => i
-    }
-    if (movedIdx.size > MaxMovedInstances) return fullAtHeads()
-
-    def plainRows(n: String, rel: DataSourceV2Relation): DataFrame = {
-      val (c, h) = ck(n)
-      tables(n).changelogScan(spark, c, Some(h))
-        .select(rel.output.map(a => col(a.name)): _*)
-    }
-    val headFrames = names.map { n =>
-      val t = tables(n)
-      t.scan(spark, t.AtSnapshot(ck(n)._2))
-    }
-    val pruned = names.map { n =>
-      val t = tables(n)
-      val h = ck(n)._2
-      Some((fs: Seq[org.apache.spark.sql.sources.Filter]) =>
-        t.scanStatsPruned(spark, fs, t.AtSnapshot(h)))
-    }
-    // r16: each moved delta is persisted ONCE (it feeds 2^(m−1) cover
-    // terms plus its envelope aggregation), and its equi-join-key
-    // min/max bound the head scans every term joins it against — the
-    // derivation's head-side INPUT becomes churn-local, closing the
-    // last linear term in the tick (the rehearsal's 1.2× residue).
-    val eqAll = treeEquiPairs(rm.aggChild, rm.rels)
-    val colsByInst = eqAll
-      .flatMap { case (a, ca, b, cb) => Seq(a -> ca, b -> cb) }
-      .groupBy(_._1).map { case (i, xs) => i -> xs.map(_._2).distinct }
-    val deltaFrames = movedIdx.map(i =>
-      i -> plainRows(names(i), rm.rels(i))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)).toMap
-    try {
-      val stats = deltaFrames.map { case (i, df) =>
-        i -> deltaEquiStats(df, colsByInst.getOrElse(i, Nil))
-      }
-      // every non-empty subset of the moved instances: deltas for the
-      // subset, heads for the rest; provably-empty terms drop
-      val subsets = (1 until (1 << movedIdx.size)).map(mask =>
-        movedIdx.zipWithIndex.collect {
-          case (inst, bit) if (mask & (1 << bit)) != 0 => inst
-        }.toSet)
-      val terms = subsets.flatMap(s =>
-        rm.termFrames(spark, s, deltaFrames, stats, headFrames, pruned, eqAll)
-          .map(frames => rm.keysOf(spark, frames)))
-      val touched =
-        (if (terms.isEmpty) rm.keysOf(spark, headFrames).limit(0)
-        else terms.reduceLeft(_ unionByName _)).distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        mv.replaceKeys(spark, rm.keyOutNames,
-          rm.touchedOut(touched),
-          rm.rebuild(spark, touched, headFrames, pruned),
-          meta.currentSnapshotId, extraProperties = ckpts)
-        Incremental
-      } finally touched.unpersist(blocking = false)
-    } finally deltaFrames.values.foreach(_.unpersist(blocking = false))
-  }
 
   /** The rebuild tier over a LEFT-DEEP chain of INNER/LEFT joins with
     * 3+ sides (r16, the bread-and-butter reporting MV: `fact LEFT
@@ -2836,7 +1946,6 @@ object GraftMaterializedViews {
     * above-aggregate null-safe semi stays the exactness gate. */
   private[engine] final case class RebuildChainShape(
       catalogName: String,
-      idents: Seq[TableIdent],
       rels: Seq[DataSourceV2Relation],
       analyzed: LogicalPlan,
       aggChild: LogicalPlan,
@@ -2845,34 +1954,11 @@ object GraftMaterializedViews {
       conds: Seq[Option[Expression]],
       groupAttrs: Seq[AttributeReference],
       keyOutIdx: Seq[Int],
-      declaredNames: Seq[String]) {
+      declaredNames: Seq[String]) extends RecomputeOnTouch {
 
-    def nameOf(ti: TableIdent): String =
-      s"$catalogName.${ti.namespace.mkString(".")}.${ti.name}"
-    def keySrcNames: Seq[String] = groupAttrs.map(_.name)
-    def keyOutNames: Seq[String] = keyOutIdx.map(declaredNames)
+    def keys: Seq[(Expression, String)] = groupAttrs.map(a => (a, a.name))
     def withOutNames(declared: Seq[String]): RebuildChainShape =
       copy(declaredNames = declared)
-
-    def table(spark: SparkSession, ti: TableIdent): GraftTable = {
-      val plugin = GraftShims.catalogPlugin(spark, Some(catalogName))
-      plugin.asInstanceOf[GraftSparkCatalog].engineTable(ti)
-    }
-
-    def touchedOut(touched: DataFrame): DataFrame =
-      touched.select(keySrcNames.zip(keyOutNames)
-        .map { case (s, o) => col(s).as(o) }: _*)
-
-    private def substitute(plan: LogicalPlan, frames: Seq[DataFrame]): LogicalPlan = {
-      val byOutput = rels.zip(frames)
-      plan.transformUp {
-        case r: DataSourceV2Relation =>
-          byOutput.find(_._1.output == r.output) match {
-            case Some((rel, frame)) => restoreAttrs(rel, frame)
-            case None => r
-          }
-      }
-    }
 
     /** Keys of the chain (its OWN join semantics — outer levels
       * null-extend, so every pattern appears) at the substituted
@@ -2905,7 +1991,6 @@ object GraftMaterializedViews {
       * the part-B rebuild, which run UNDEMOTED on unrestricted
       * frames. */
     private def demoteFull(p: LogicalPlan): LogicalPlan = {
-      import org.apache.spark.sql.catalyst.plans.{FullOuter, LeftOuter}
       p.transformUp {
         case j @ Join(_, _, FullOuter, _, _) => j.copy(joinType = LeftOuter)
       }
@@ -2922,12 +2007,10 @@ object GraftMaterializedViews {
     def fullDimCandidates(
         spark: SparkSession, j: Int, envFrames: Seq[DataFrame],
         frames: Seq[DataFrame], delta: Option[DataFrame]): DataFrame = {
-      import org.apache.spark.sql.catalyst.plans.LeftSemi
-      import org.apache.spark.sql.catalyst.plans.logical.{Join => LJoin, JoinHint}
       val dimNames = rels(j).output.map(_.name)
       val matchTerm = conds(j - 1) match {
         case Some(cnd) =>
-          val semi = LJoin(restoreAttrs(rels(j), frames(j)),
+          val semi = Join(restoreAttrs(rels(j), frames(j)),
             substitute(prefixPlans(j - 1), envFrames), LeftSemi,
             Some(cnd), JoinHint.NONE)
           GraftShims.ofRows(spark, Project(rels(j).output.map(a =>
@@ -2958,33 +2041,6 @@ object GraftMaterializedViews {
         if (i < j) f.limit(0) else if (i == j) candidates else f
       })
 
-    /** Gated UNRESTRICTED rebuild (r18, FULL tier part B): the
-      * defining plan at the FULL frames — no spine restriction, no
-      * envelopes; for all-prefix-keys-NULL tuples any frame surgery
-      * either fabricates or loses null-extensions — with the
-      * null-safe semi as the only gate. Full-scan compute,
-      * churn-sized aggregate state and write (the same cost class as
-      * the expr tier's opaque-key scans). */
-    def rebuildGated(
-        spark: SparkSession, touched: DataFrame,
-        frames: Seq[DataFrame]): DataFrame = {
-      import org.apache.spark.sql.catalyst.expressions.{And, EqualNullSafe}
-      import org.apache.spark.sql.catalyst.plans.LeftSemi
-      import org.apache.spark.sql.catalyst.plans.logical.{Join => LJoin, JoinHint}
-      val touchedPlan = touched.queryExecution.analyzed
-      val cond = groupAttrs.zip(touchedPlan.output)
-        .map { case (g, t) => EqualNullSafe(g, t): Expression }
-        .reduceLeft(And(_, _))
-      val restricted = substitute(analyzed, frames).transformUp {
-        case a: Aggregate if a.groupingExpressions == (groupAttrs: Seq[Expression]) =>
-          a.copy(child = LJoin(a.child, touchedPlan, LeftSemi, Some(cond), JoinHint.NONE))
-        case d: org.apache.spark.sql.catalyst.plans.logical.Distinct
-            if strip(d.child).output == groupAttrs =>
-          d.copy(child = LJoin(d.child, touchedPlan, LeftSemi, Some(cond), JoinHint.NONE))
-      }
-      GraftShims.ofRows(spark, restricted).toDF(declaredNames: _*)
-    }
-
     /** Equality pairs LEGAL for enveloping side `j` (r17 provenance
       * fix): conjuncts of join j's OWN condition — there side j is the
       * non-preserved side, so rows failing them only null-extend side
@@ -2999,7 +2055,6 @@ object GraftMaterializedViews {
       * and aggregates. Conditions at level l reference sides 0..l
       * only (left-deep chain), so side j appears in levels ≥ j. */
     private[engine] def envelopePairs(j: Int): Seq[(Int, String, Int, String)] = {
-      import org.apache.spark.sql.catalyst.plans.Inner
       val levels = (j until rels.size).filter(l =>
         l == j || joinTypes(l - 1) == Inner)
       levels.flatMap { l =>
@@ -3077,8 +2132,6 @@ object GraftMaterializedViews {
         stats: Map[Int, DeltaEquiStats],
         prunedScans: Seq[Option[Seq[org.apache.spark.sql.sources.Filter] => DataFrame]])
         : DataFrame = {
-      import org.apache.spark.sql.catalyst.plans.LeftSemi
-      import org.apache.spark.sql.catalyst.plans.logical.{Join => LJoin, JoinHint}
       val terms = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       deltas.get(0).foreach(d => terms += d)
       for ((j, dj) <- deltas.toSeq.sortBy(_._1) if j > 0 && stats(j).rows > 0L) {
@@ -3130,7 +2183,7 @@ object GraftMaterializedViews {
             }
           }
         }
-        val semiPlan = LJoin(
+        val semiPlan = Join(
           substitute(prefixPlans(prefixLevel), pframes),
           restoreAttrs(rels(j), dj), LeftSemi, cnd, JoinHint.NONE)
         val avail = semiPlan.outputSet
@@ -3182,16 +2235,8 @@ object GraftMaterializedViews {
         spark: SparkSession, touched: DataFrame, frames: Seq[DataFrame],
         prunedScans: Seq[Option[Seq[org.apache.spark.sql.sources.Filter] => DataFrame]])
         : DataFrame = {
-      import org.apache.spark.sql.catalyst.expressions.{And, EqualNullSafe}
-      import org.apache.spark.sql.catalyst.plans.LeftSemi
-      import org.apache.spark.sql.catalyst.plans.logical.{Join => LJoin, JoinHint}
-      val touchedPlan = touched.queryExecution.analyzed
-      val cond = groupAttrs.zip(touchedPlan.output)
-        .map { case (g, t) => EqualNullSafe(g, t): Expression }
-        .reduceLeft(And(_, _))
       val spineNarrowed = groupAttrs.exists(rels.head.outputSet.contains)
-      val restricted0 = GraftMaterializedViews.restrictFrame(
-        groupAttrs, frames(0), touched, rels.head.outputSet,
+      val restricted0 = restrictFrame(keys, frames(0), touched, rels.head.outputSet,
         prunedScans.headOption.flatten)
       val finalFrames = cascadeEnvelope(
         spark, restricted0, spineNarrowed, frames, prunedScans)
@@ -3199,25 +2244,77 @@ object GraftMaterializedViews {
       // tuples carrying a prefix row — so the FULL level demotes to
       // LEFT (exact for that population; see demoteFull) and the
       // restricted/enveloped frames stay sound by the LEFT argument
-      val swapped0 = substitute(analyzed, finalFrames)
-      val swapped =
-        if (joinTypes.contains(org.apache.spark.sql.catalyst.plans.FullOuter))
-          demoteFull(swapped0)
-        else swapped0
-      val restricted = swapped.transformUp {
-        case a: Aggregate if a.groupingExpressions == (groupAttrs: Seq[Expression]) =>
-          a.copy(child = LJoin(a.child, touchedPlan, LeftSemi, Some(cond), JoinHint.NONE))
-        case d: org.apache.spark.sql.catalyst.plans.logical.Distinct
-            if strip(d.child).output == groupAttrs =>
-          d.copy(child = LJoin(d.child, touchedPlan, LeftSemi, Some(cond), JoinHint.NONE))
-      }
-      GraftShims.ofRows(spark, restricted).toDF(declaredNames: _*)
+      rebuildAt(spark, touched, finalFrames,
+        if (fullLevel.isDefined) demoteFull else identity)
     }
 
-    /** Unrestricted re-execution (cold start / full-at-heads). */
-    def rebuildFull(spark: SparkSession, frames: Seq[DataFrame]): DataFrame =
-      GraftShims.ofRows(spark, substitute(analyzed, frames))
-        .toDF(declaredNames: _*)
+    /** The single FULL level's dim side, if any (joinTypes(i) joins
+      * rels(i + 1)). */
+    private def fullLevel: Option[Int] =
+      Some(joinTypes.indexWhere(_ == FullOuter) + 1).filter(_ > 0)
+
+    /** The spine cover: the affected spine at BOTH states (checkpoints
+      * and heads), and the chain's own outer semantics evaluated over
+      * it at both states for the touched keys. Cost: two churn-driven
+      * chain evaluations plus one delta-bounded prefix semi per moved
+      * side — no exponential cover, so no moved-instance cap. */
+    def touchedKeys(t: Tick): DataFrame = {
+      val affected = t.persist(
+        affectedSpine(t.spark, t.headFrames, t.deltas, t.stats, t.prunedHeads)
+          .unionByName(affectedSpine(t.spark, t.ckptFrames, t.deltas, t.stats, t.prunedCkpts))
+          .distinct())
+      // both chain evaluations run with the dims ENVELOPED by the
+      // affected spine's equi-column bounds (r16): matched tuples
+      // and null-extensions of affected rows are unchanged, so the
+      // keys are identical — and the dim scans are churn-local
+      val envHead = cascadeEnvelope(
+        t.spark, affected, spineNarrowed = true, t.headFrames, t.prunedHeads)
+      val envCkpt = cascadeEnvelope(
+        t.spark, affected, spineNarrowed = true, t.ckptFrames, t.prunedCkpts)
+      // prefix-side keys (demoted when a FULL level exists — the
+      // dim-side null-extension keys come from the empty-spine
+      // derivation below, so the restricted evaluations never
+      // fabricate them)
+      val keysA = keysOf(t.spark, envHead, demoteFullLevel = fullLevel.isDefined)
+        .unionByName(keysOf(t.spark, envCkpt, demoteFullLevel = fullLevel.isDefined))
+      fullLevel.map { j =>
+        val cHead = fullDimCandidates(t.spark, j, envHead, t.headFrames, t.deltas.get(j))
+        val cCkpt = fullDimCandidates(t.spark, j, envCkpt, t.ckptFrames, t.deltas.get(j))
+        keysA
+          .unionByName(fullDimNullExtKeys(t.spark, j, t.headFrames, cHead))
+          .unionByName(fullDimNullExtKeys(t.spark, j, t.ckptFrames, cCkpt))
+      }.getOrElse(keysA)
+    }
+
+    /** r18, FULL level: tuples carrying a prefix-resident key value
+      * rebuild through the restricted/enveloped part-A path (FULL
+      * demoted to LEFT — exact for that population); the
+      * all-prefix-keys-NULL tuples — dim-side null-extensions and
+      * NULL-valued prefix keys — rebuild through part B, which only
+      * executes when such tuples were actually touched: the defining
+      * plan at the UNRESTRICTED head frames (no spine restriction, no
+      * envelopes — for those tuples any frame surgery either fabricates
+      * or loses null-extensions) with the null-safe semi as the only
+      * gate. Full-scan compute, churn-sized aggregate state and write.
+      * No FULL level: the part-A path alone. */
+    def rebuildTouched(t: Tick, touched: DataFrame): DataFrame = fullLevel match {
+      case None => rebuild(t.spark, touched, t.headFrames, t.prunedHeads)
+      case Some(j) =>
+        val prefixKeyCols = groupAttrs.collect {
+          case a if (0 until j).exists(k => rels(k).outputSet.contains(a)) => a.name
+        }
+        if (prefixKeyCols.isEmpty)
+          // every key lives on the FULL dim or later: every tuple is
+          // in part B's population
+          rebuildAt(t.spark, touched, t.headFrames)
+        else {
+          val touchedA = touched.filter(prefixKeyCols.map(col(_).isNotNull).reduce(_ or _))
+          val touchedB = touched.filter(prefixKeyCols.map(col(_).isNull).reduce(_ and _))
+          val partA = rebuild(t.spark, touchedA, t.headFrames, t.prunedHeads)
+          if (touchedB.isEmpty) partA
+          else partA.unionByName(rebuildAt(t.spark, touchedB, t.headFrames))
+        }
+    }
   }
 
   /** Left-deep chain of INNER/LEFT joins over DSv2 relations: returns
@@ -3227,7 +2324,6 @@ object GraftMaterializedViews {
   private def collectLeftChainInfo(p: LogicalPlan)
       : Option[(Seq[DataSourceV2Relation], Seq[LogicalPlan],
         Seq[org.apache.spark.sql.catalyst.plans.JoinType], Seq[Option[Expression]])] = {
-    import org.apache.spark.sql.catalyst.plans.{FullOuter, LeftOuter}
     belowChain(p) match {
       case Join(l, r, jt @ (Inner | LeftOuter | FullOuter), cond, _)
           if cond.forall(_.deterministic) =>
@@ -3278,9 +2374,6 @@ object GraftMaterializedViews {
     *    no rehearsal for. Hints swap with the children.
     * Outer joins are NOT rotated (they don't associate in general). */
   private[engine] def normalizeJoinOrder(p: LogicalPlan): LogicalPlan = {
-    import org.apache.spark.sql.catalyst.expressions.And
-    import org.apache.spark.sql.catalyst.plans.{LeftOuter, RightOuter}
-    import org.apache.spark.sql.catalyst.plans.logical.JoinHint
     var cur = p
     var rounds = 0
     var changed = true
@@ -3323,11 +2416,10 @@ object GraftMaterializedViews {
     * identical — is what the shape stores and the tick re-executes. */
   private[engine] def rebuildChainShapeOf(
       spark: SparkSession, analyzed0: LogicalPlan): Option[RebuildChainShape] = {
-    import org.apache.spark.sql.catalyst.plans.FullOuter
     val analyzed = normalizeJoinOrder(analyzed0)
-    val (groupExprs, aggChild) = peelToAggregate(strip(analyzed)).getOrElse(return None)
+    val agg = peelAggNode(strip(analyzed)).getOrElse(return None)
     val (rels, prefixes, jts, conds) =
-      collectLeftChainInfo(aggChild).getOrElse(return None)
+      collectLeftChainInfo(agg.child).getOrElse(return None)
     if (rels.size < 3) return None // the 2-table tier owns n = 2
     if (jts.forall(_ == Inner)) return None // all-inner: the subset tier owns it
     // ONE FULL level supported (r18): its dim-side null-extensions are
@@ -3336,174 +2428,13 @@ object GraftMaterializedViews {
     // spine row — a second FULL level below would break exactly that.
     // Multiple FULLs keep the honest full fallback (spec-pinned).
     if (jts.count(_ == FullOuter) > 1) return None
-    if (!rels.forall(r => r.identifier.isDefined &&
-        r.catalog.exists(_.isInstanceOf[GraftSparkCatalog]))) return None
+    if (!rels.forall(graftRel(_).isDefined)) return None
     val catNames = rels.map(_.catalog.get.name()).distinct
     if (catNames.size != 1) return None
-    val (groupAttrs, keyOutIdx) = traceKeys(analyzed, groupExprs,
-      rels.map(_.outputSet).reduce(_ ++ _)).getOrElse(return None)
-    Some(RebuildChainShape(
-      catNames.head,
-      rels.map(r => TableIdent(
-        r.identifier.get.namespace().toSeq, r.identifier.get.name())),
-      rels, analyzed, aggChild, prefixes, jts, conds,
-      groupAttrs, keyOutIdx,
-      analyzed.output.map(_.name)))
-  }
-
-  /** One refresh tick for [[RebuildChainShape]]: NoOp when every
-    * checkpoint matches its head; otherwise derive the affected spine
-    * at BOTH states (checkpoints and heads), evaluate the chain's own
-    * outer semantics over it at both states for the touched keys, and
-    * commit the churn-sized keyed replacement advancing all
-    * checkpoints atomically. Cost per tick: two churn-driven chain
-    * evaluations plus one delta-bounded prefix semi per moved side —
-    * no exponential cover, so no moved-instance cap. */
-  private def refreshRebuildChain(
-      spark: SparkSession, mv: GraftTable, rc: RebuildChainShape): RefreshMode = {
-    val meta = mv.metadata
-    val names = rc.idents.map(rc.nameOf)
-    val distinctIdents = rc.idents.zip(names).distinctBy(_._2)
-    val tables = distinctIdents.map { case (ti, n) => n -> rc.table(spark, ti) }.toMap
-    val heads = tables.map { case (n, t) => n -> t.metadata.currentSnapshotId }
-    def headMark(h: Option[Long]): String = h.map(_.toString).getOrElse("none")
-    val ckpts = heads.map { case (n, h) =>
-      ChangelogApply.ckptKey(n) -> headMark(h)
-    } ++ Map(RefreshModeProp -> "incremental-rebuild")
-    if (heads.forall { case (n, h) =>
-      meta.properties.get(ChangelogApply.ckptKey(n)).contains(headMark(h))
-    }) return NoOp
-
-    def fullAtHeads(): RefreshMode = {
-      def frameAt(n: String): DataFrame = {
-        val t = tables(n)
-        heads(n).map(id => t.scan(spark, t.AtSnapshot(id))).getOrElse(t.scan(spark))
-      }
-      mv.overwriteAll(
-        rc.rebuildFull(spark, names.map(frameAt)),
-        meta.currentSnapshotId, extraProperties = ckpts)
-      Full
-    }
-
-    val parsed = heads.map { case (n, h) =>
-      n -> (meta.properties.get(ChangelogApply.ckptKey(n)).flatMap(_.toLongOption), h)
-    }
-    if (!parsed.forall { case (_, (c, h)) => c.isDefined && h.isDefined })
-      return fullAtHeads() // a checkpoint missing or a table headless
-    val ck = parsed.map { case (n, (c, h)) => n -> (c.get, h.get) }
-    val movedIdx = names.zipWithIndex.collect {
-      case (n, i) if ck(n)._1 != ck(n)._2 => i
-    }
-
-    val eqAll = treeEquiPairs(rc.aggChild, rc.rels)
-    val colsByInst = eqAll
-      .flatMap { case (a, ca, b, cb) => Seq(a -> ca, b -> cb) }
-      .groupBy(_._1).map { case (i, xs) => i -> xs.map(_._2).distinct }
-    def plainRows(n: String, rel: DataSourceV2Relation): DataFrame = {
-      val (c, h) = ck(n)
-      tables(n).changelogScan(spark, c, Some(h))
-        .select(rel.output.map(a => col(a.name)): _*)
-    }
-    val deltaFrames = movedIdx.map(i =>
-      i -> plainRows(names(i), rc.rels(i))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)).toMap
-    try {
-      val stats = deltaFrames.map { case (i, df) =>
-        i -> deltaEquiStats(df, colsByInst.getOrElse(i, Nil))
-      }
-      def framesAt(sel: String => Long): Seq[DataFrame] = names.map { n =>
-        val t = tables(n)
-        t.scan(spark, t.AtSnapshot(sel(n)))
-      }
-      def prunedAt(sel: String => Long)
-          : Seq[Option[Seq[org.apache.spark.sql.sources.Filter] => DataFrame]] =
-        names.map { n =>
-          val t = tables(n)
-          val s = sel(n)
-          Some((fs: Seq[org.apache.spark.sql.sources.Filter]) =>
-            t.scanStatsPruned(spark, fs, t.AtSnapshot(s)))
-        }
-      val headFrames = framesAt(n => ck(n)._2)
-      val ckptFrames = framesAt(n => ck(n)._1)
-      val affected = rc.affectedSpine(spark, headFrames, deltaFrames, stats,
-        prunedAt(n => ck(n)._2))
-        .unionByName(rc.affectedSpine(spark, ckptFrames, deltaFrames, stats,
-          prunedAt(n => ck(n)._1)))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        // both chain evaluations run with the dims ENVELOPED by the
-        // affected spine's equi-column bounds (r16): matched tuples
-        // and null-extensions of affected rows are unchanged, so the
-        // keys are identical — and the dim scans are churn-local
-        val fullRel = rc.joinTypes.indexWhere(
-          _ == org.apache.spark.sql.catalyst.plans.FullOuter) match {
-          case -1 => None
-          case i => Some(i + 1) // joinTypes(i) joins rels(i + 1)
-        }
-        val envHead = rc.cascadeEnvelope(
-          spark, affected, spineNarrowed = true, headFrames,
-          prunedAt(n => ck(n)._2))
-        val envCkpt = rc.cascadeEnvelope(
-          spark, affected, spineNarrowed = true, ckptFrames,
-          prunedAt(n => ck(n)._1))
-        // prefix-side keys (demoted when a FULL level exists — the
-        // dim-side null-extension keys come from the empty-spine
-        // derivation below, so the restricted evaluations never
-        // fabricate them)
-        val keysA = rc.keysOf(spark, envHead, demoteFullLevel = fullRel.isDefined)
-          .unionByName(
-            rc.keysOf(spark, envCkpt, demoteFullLevel = fullRel.isDefined))
-        val touched = fullRel.map { j =>
-          val cHead = rc.fullDimCandidates(spark, j, envHead, headFrames,
-            deltaFrames.get(j))
-          val cCkpt = rc.fullDimCandidates(spark, j, envCkpt, ckptFrames,
-            deltaFrames.get(j))
-          keysA
-            .unionByName(rc.fullDimNullExtKeys(spark, j, headFrames, cHead))
-            .unionByName(rc.fullDimNullExtKeys(spark, j, ckptFrames, cCkpt))
-        }.getOrElse(keysA)
-          .distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          // r18, FULL level: tuples carrying a prefix-resident key
-          // value rebuild through the restricted/enveloped part-A path
-          // (FULL demoted to LEFT — exact for that population); the
-          // all-prefix-keys-NULL tuples — dim-side null-extensions and
-          // NULL-valued prefix keys — rebuild through the UNRESTRICTED
-          // gated part B, which only executes when such tuples were
-          // actually touched. No FULL level: the r17 path unchanged.
-          val rebuilt = fullRel match {
-            case None =>
-              rc.rebuild(spark, touched, headFrames, prunedAt(n => ck(n)._2))
-            case Some(j) =>
-              val prefixKeyCols = rc.groupAttrs.collect {
-                case a if (0 until j).exists(k =>
-                  rc.rels(k).outputSet.contains(a)) => a.name
-              }
-              if (prefixKeyCols.isEmpty)
-                // every key lives on the FULL dim or later: every
-                // tuple is in part B's population
-                rc.rebuildGated(spark, touched, headFrames)
-              else {
-                val touchedA = touched.filter(
-                  prefixKeyCols.map(col(_).isNotNull).reduce(_ or _))
-                val touchedB = touched.filter(
-                  prefixKeyCols.map(col(_).isNull).reduce(_ and _))
-                val partA = rc.rebuild(spark, touchedA, headFrames,
-                  prunedAt(n => ck(n)._2))
-                if (touchedB.isEmpty) partA
-                else partA.unionByName(
-                  rc.rebuildGated(spark, touchedB, headFrames))
-              }
-          }
-          mv.replaceKeys(spark, rc.keyOutNames,
-            rc.touchedOut(touched), rebuilt,
-            meta.currentSnapshotId, extraProperties = ckpts)
-          Incremental
-        } finally touched.unpersist(blocking = false)
-      } finally affected.unpersist(blocking = false)
-    } finally deltaFrames.values.foreach(_.unpersist(blocking = false))
+    val (groupAttrs, keyOutIdx) =
+      attrKeys(analyzed, agg, rels.map(_.outputSet).reduce(_ ++ _)).getOrElse(return None)
+    Some(RebuildChainShape(catNames.head, rels, analyzed, agg.child, prefixes, jts, conds,
+      groupAttrs, keyOutIdx, analyzed.output.map(_.name)))
   }
 
   /** Analyzed plan → foldable shape, or None (→ full-refresh MV).

@@ -288,10 +288,11 @@ final case class VectorBestByCosine(left: Expression, right: Expression)
       b.asInstanceOf[ArrayData], isFloat(left.dataType))
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val f = isFloat(left.dataType)
+    val r = ctx.freshName("r")
     nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      Object r = $helperRef.bestByCosine($a, $b, $f);
-      if (r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) r; }""")
+      Object $r = $helperRef.bestByCosine($a, $b, $f);
+      if ($r == null) { ${ev.isNull} = true; }
+      else { ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $r; }""")
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): VectorBestByCosine =
     copy(left = l, right = r)
@@ -308,10 +309,11 @@ final case class VectorBestByL2(left: Expression, right: Expression)
       b.asInstanceOf[ArrayData], isFloat(left.dataType))
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val f = isFloat(left.dataType)
+    val r = ctx.freshName("r")
     nullSafeCodeGen(ctx, ev, (a, b) => s"""
-      Object r = $helperRef.bestByL2($a, $b, $f);
-      if (r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) r; }""")
+      Object $r = $helperRef.bestByL2($a, $b, $f);
+      if ($r == null) { ${ev.isNull} = true; }
+      else { ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $r; }""")
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): VectorBestByL2 =
     copy(left = l, right = r)

@@ -1447,6 +1447,36 @@ class MaterializedViewSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.map(_.head) === Set("b"))
     assert(GraftMaterializedViews.refresh(spark, graftCatalog,
       TableIdent(Seq("db"), "mv_having")) === GraftMaterializedViews.NoOp)
+    // a ONE-key churn over a compacted source: compaction clears the
+    // delete debt, then four single-file batches with disjoint key
+    // ranges land beside the compacted file; the tick's source scan
+    // must file-prune to the churned key's batch, never re-list the
+    // whole layout
+    spark.sql(s"CALL $cat.system.rewrite_data_files(table => 'db.hv', target_file_count => 1)")
+    for (i <- 0 until 4) {
+      spark.sql(s"INSERT INTO $cat.db.hv SELECT " +
+        s"concat('k', lpad(CAST(id % 10 + ${i * 10} AS STRING), 2, '0')), CAST(id AS DOUBLE) " +
+        s"FROM range(0, 20, 1, 1)")
+    }
+    assert(GraftMaterializedViews.refresh(spark, graftCatalog,
+      TableIdent(Seq("db"), "mv_having")) === GraftMaterializedViews.Incremental)
+    assert(got === expect)
+    val hv = graftCatalog.engineTable(TableIdent(Seq("db"), "hv"))
+    GraftTable.plannedDataFiles.set(0L)
+    hv.scan(spark)
+    val sourceFiles = GraftTable.plannedDataFiles.get()
+    assert(sourceFiles === 5L, s"expected the compacted file + 4 batches, saw $sourceFiles")
+    spark.sql(s"INSERT INTO $cat.db.hv VALUES ('k07', 0.5)")
+    GraftTable.plannedDataFiles.set(0L)
+    assert(GraftMaterializedViews.refresh(spark, graftCatalog,
+      TableIdent(Seq("db"), "mv_having")) === GraftMaterializedViews.Incremental)
+    val planned = GraftTable.plannedDataFiles.get()
+    assert(got === expect)
+    // the changelog plans the churn file; the pruned source keeps the
+    // k00–k09 batch and the churn file — an unpruned source would add
+    // the compacted file and the three other batches
+    assert(planned <= 3L,
+      s"HAVING tick planned $planned files for a 1-key churn (source layout = $sourceFiles + 1)")
   }
 
   test("rebuild tier: expressions over aggregates and TWO value columns, churn-sized commit") {
@@ -2021,8 +2051,12 @@ class MaterializedViewSpec extends AnyFunSuite with BeforeAndAfterAll {
          |  FROM $cat.db.lb) WHERE rn <= 3""".stripMargin
     val analyzed = spark.sessionState.executePlan(
       spark.sessionState.sqlParser.parsePlan(defSql)).analyzed
-    assert(GraftMaterializedViews.rebuildWindowShapeOf(spark, analyzed).isDefined,
-      "rank<=k spelling must match the window shape")
+    GraftMaterializedViews.detect(spark, analyzed) match {
+      case rw: GraftMaterializedViews.RebuildExprShape =>
+        assert(rw.groupExprs.map(_.sql) === Seq("k") && rw.keyNames === Seq("k"),
+          "the window shape keys on the partition attribute")
+      case other => fail(s"rank<=k spelling must match the window shape, got $other")
+    }
     spark.sql(s"CREATE MATERIALIZED VIEW $cat.db.mv_lb AS $defSql")
     assert(spark.sql(s"SHOW TBLPROPERTIES $cat.db.mv_lb")
       .collect().exists(r => r.getString(0) == GraftMaterializedViews.RefreshModeProp &&
@@ -2075,7 +2109,8 @@ class MaterializedViewSpec extends AnyFunSuite with BeforeAndAfterAll {
     val analyzed = spark.sessionState.executePlan(
       spark.sessionState.sqlParser.parsePlan(defSql)).analyzed
     assert(GraftMaterializedViews.shapeOf(spark, analyzed).isEmpty)
-    assert(GraftMaterializedViews.rebuildShapeOf(spark, analyzed).isDefined)
+    assert(GraftMaterializedViews.detect(spark, analyzed)
+      .isInstanceOf[GraftMaterializedViews.RebuildExprShape])
     spark.sql(s"CREATE MATERIALIZED VIEW $cat.db.mv_lrk AS $defSql")
     assert(spark.sql(s"SHOW TBLPROPERTIES $cat.db.mv_lrk")
       .collect().exists(r => r.getString(0) == GraftMaterializedViews.RefreshModeProp &&
@@ -2163,11 +2198,13 @@ class MaterializedViewSpec extends AnyFunSuite with BeforeAndAfterAll {
          |  FROM $cat.db.wet) WHERE rn <= 2""".stripMargin
     val analyzed = spark.sessionState.executePlan(
       spark.sessionState.sqlParser.parsePlan(defSql)).analyzed
-    assert(GraftMaterializedViews.rebuildWindowShapeOf(spark, analyzed).isEmpty,
-      "the attribute window tier must NOT claim expression partitions")
-    val rwe = GraftMaterializedViews.rebuildWindowExprShapeOf(spark, analyzed)
-      .getOrElse(fail("expression window partitions must match the window-expr tier"))
-    assert(rwe.sourceGate, "the window-expr shape gates at the source")
+    val rwe = GraftMaterializedViews.detect(spark, analyzed) match {
+      case rw: GraftMaterializedViews.RebuildExprShape => rw
+      case other => fail(s"expression window partitions must match the window shape, got $other")
+    }
+    assert(!rwe.groupExprs.head.isInstanceOf[
+      org.apache.spark.sql.catalyst.expressions.AttributeReference] &&
+      rwe.keyNames === Seq("day"), "the partition key is the exposed day bucket")
     spark.sql(s"CREATE MATERIALIZED VIEW $cat.db.mv_wet AS $defSql")
     assert(spark.sql(s"SHOW TBLPROPERTIES $cat.db.mv_wet")
       .collect().exists(r => r.getString(0) == GraftMaterializedViews.RefreshModeProp &&
@@ -2269,12 +2306,10 @@ class MaterializedViewSpec extends AnyFunSuite with BeforeAndAfterAll {
     def shapeOfSql(sql: String) = {
       val analyzed = spark.sessionState.executePlan(
         spark.sessionState.sqlParser.parsePlan(sql)).analyzed
-      // r18: neither the attribute tier nor the expression tier may
-      // claim these shapes — represent "claimed" as either matching
-      GraftMaterializedViews.rebuildWindowShapeOf(spark, analyzed)
-        .map(_ => ()).orElse(
-          GraftMaterializedViews.rebuildWindowExprShapeOf(spark, analyzed)
-            .map(_ => ()))
+      // r18: no window shape may claim these — "claimed" is any
+      // detection other than the full recompute
+      Some(GraftMaterializedViews.detect(spark, analyzed))
+        .filterNot(_.isInstanceOf[GraftMaterializedViews.FullRecompute])
     }
     // global window (empty partition): every row's rank depends on
     // ALL rows — recompute-on-touch would be wrong, must not match
@@ -2670,18 +2705,22 @@ class MaterializedViewSpec extends AnyFunSuite with BeforeAndAfterAll {
     // day's files through the inverse-bounds registry
     val analyzed = spark.sessionState.executePlan(
       spark.sessionState.sqlParser.parsePlan(defSql)).analyzed
-    val rx = GraftMaterializedViews.rebuildJoinExprShapeOf(spark, analyzed)
-      .getOrElse(fail("defining SQL no longer matches the join-expr shape"))
+    val rx = GraftMaterializedViews.detect(spark, analyzed) match {
+      case rj: GraftMaterializedViews.RebuildJoinShape => rj
+      case other => fail(s"defining SQL no longer matches the join rebuild shape, got $other")
+    }
+    assert(rx.keyNames === Seq("d", "region"))
     val lt = rx.table(spark, rx.leftIdent)
     val lh = lt.metadata.currentSnapshotId.get
     GraftTable.plannedDataFiles.set(0L)
-    lt.scan(spark, lt.AtSnapshot(lh))
+    val aHead = lt.scan(spark, lt.AtSnapshot(lh))
     val fullFiles = GraftTable.plannedDataFiles.get()
     assert(fullFiles >= 4L, s"expected ≥4 fact files, saw $fullFiles")
     val touched = spark.sql(
       "SELECT timestamp'2024-02-15 00:00:00' AS d, 'east' AS region")
     GraftTable.plannedDataFiles.set(0L)
-    rx.sideFrameFor(spark, lt, lh, rx.leftRel.outputSet, touched)
+    GraftMaterializedViews.restrictFrame(rx.keys, aHead, touched, rx.leftRel.outputSet,
+      Some(fs => lt.scanStatsPruned(spark, fs, lt.AtSnapshot(lh))))
     val planned = GraftTable.plannedDataFiles.get()
     // ≤3: the Feb seed file + the churn file, plus the MoR position-
     // delete file (delete files always ride along with kept data)

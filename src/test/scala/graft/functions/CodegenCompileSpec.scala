@@ -49,6 +49,23 @@ class CodegenCompileSpec extends AnyFunSuite {
       assert(math.abs(r.getDouble(2) - 3.0 / (math.sqrt(14.0) * math.sqrt(0.75))) < 1e-12)
       assert(r.getSeq[Double](3).length === 3)
       assert(r.getSeq[Double](4) === Seq(1.0, 2.0, 3.0))
+      // two argbest calls over NON-nullable inputs in one projection:
+      // nullSafeCodeGen emits their bodies unbraced into one method,
+      // so each call's result local must be uniquely named
+      val inputs = spark.range(1, 3).select($"id",
+        array($"id".cast("float"), lit(1.0f)).as("v"),
+        array(
+          struct(lit(3).as("id"), array($"id".cast("double"), lit(2.0)).as("c")),
+          struct(lit(7).as("id"), array(lit(1.0), lit(0.0)).as("c"))).as("cands"))
+      assert(!inputs.schema("v").nullable && !inputs.schema("cands").nullable)
+      val rows = inputs.select($"id",
+        VectorExprs.bestByCosine($"v", $"cands").as("bc"),
+        VectorExprs.bestByL2($"v", $"cands").as("bl")).orderBy("id").collect()
+      // v = (id, 1) against (id, 2) [id 3] and (1, 0) [id 7]: id 3 has
+      // the higher cosine for both rows and the lower-or-tied d² (ties
+      // break to the lower id)
+      assert(rows.map(r => (r.getLong(0), r.getStruct(1).getInt(0),
+        r.getStruct(2).getInt(0))).toSeq === Seq((1L, 3, 3), (2L, 3, 3)))
     }
   }
 
